@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for a query list to files —
   * the optimization-round evidence artifact (plans/rNN/<q>_{before,after}
   * .txt). Mirrors Bench's session config so the dumped plan is the plan
@@ -11,28 +9,14 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    sys.props("java.io.tmpdir") = Bench.localDir.split(",").head
     val sfDir = args(0)
     val outDir = java.nio.file.Paths.get(args(1))
     val suffix = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.local.dir", Bench.localDir)
+    val spark = LocalSession.builder(LocalSession.cpus(32), mirrorBench = true)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.RewriteLongDotProduct
     if (sys.env.getOrElse("SPARK_GRAFT_IMPORT", "1") != "0")
       sys.props("graft.import") = "1"
     graft.io.Tables.importAll(spark, sfDir)

@@ -226,14 +226,7 @@ object Run {
 
   def main(argv: Array[String]): Unit = {
     val args = parseArgs(argv)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(LocalSession.cpus(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val summary = execute(spark, args)
@@ -251,15 +244,27 @@ object Run {
     * `onFailure` is the operational notification hook (reference
     * `src/etl/utils/notify.py`, see [[graft.etl.Notify]]): any failure in
     * the batch/backfill/re-enrich path invokes it with the error, then
-    * rethrows — notification never swallows the failure. Default logs. */
+    * rethrows — notification never swallows the failure. Default logs.
+    *
+    * Returns only once every Spark job that started during the call has
+    * finished: AQE can leave a stage job running after the action that
+    * submitted it returned (e.g. [[reEnrichCategories]]'s `isEmpty`
+    * probe), and a caller's `spark.stop()` would then delete that job's
+    * shuffle files under it. The jobs are waited for, not cancelled. */
   def execute(spark: SparkSession, args: Args,
-      onFailure: Throwable => Unit = graft.etl.Notify.onFailure): String =
+      onFailure: Throwable => Unit = graft.etl.Notify.onFailure): String = {
+    val tracker = spark.sparkContext.statusTracker
+    val before = tracker.getActiveJobIds().toSet
     try executeInner(spark, args)
     catch {
       case e: Throwable =>
         try onFailure(e) catch { case scala.util.control.NonFatal(_) => () }
         throw e
+    } finally {
+      while (tracker.getActiveJobIds().exists(id => !before.contains(id)))
+        Thread.sleep(1)
     }
+  }
 
   private def executeInner(spark: SparkSession, args: Args): String = {
     val store: graft.etl.WarehouseStore =

@@ -2,17 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One shared local session for the whole test JVM (suites reuse it). */
+/** One shared local session for the whole test JVM (suites reuse it).
+  * Pinned to 4 cores whatever `SPARK_GRAFT_CPUS` says, so specs see the
+  * same partitioning on every host. */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    LocalSession.builder(4).appName("graft-test").getOrCreate()
 
   def readJson(schema: org.apache.spark.sql.types.StructType, rows: String*): DataFrame = {
     import spark.implicits._

@@ -112,6 +112,19 @@ class RunSpec extends AnyFunSuite {
       "idle replay changed log-backend contents")
   }
 
+  test("--log-warehouse: execute returns only after every job it started has finished") {
+    // an AQE stage job can outlive the action that submitted it (the
+    // re-enrich pass's isEmpty probe); a caller's spark.stop() right after
+    // execute would delete that job's shuffle files under it
+    val wh = java.nio.file.Files.createTempDirectory("graft-run-jobs").toString
+    val base = Run.Args(data = data, warehouse = wh, now = now, logWarehouse = true)
+    for (args <- Seq(base.copy(backfillStart = Some("2001-06-01")), base)) {
+      Run.execute(spark, args)
+      val active = spark.sparkContext.statusTracker.getActiveJobIds()
+      assert(active.isEmpty, s"jobs ${active.mkString(",")} still running after $args")
+    }
+  }
+
   test("execute invokes onFailure with the error and rethrows (notify.py twin)") {
     val wh = java.nio.file.Files.createTempDirectory("graft-run-fail").toString
     var seen: Option[Throwable] = None

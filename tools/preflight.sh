@@ -30,14 +30,7 @@ fi
 # brute force at 10x soak replicas, asserted >= 0.9 inside the probe —
 # a failed gate turns the whole preflight red.
 if [ $rc -eq 0 ]; then
-  rec="$(java -Xmx8g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-    --add-exports java.base/sun.nio.ch=ALL-UNNAMED \
-    --add-opens java.base/java.nio=ALL-UNNAMED \
-    --add-opens java.base/java.util=ALL-UNNAMED \
-    --add-opens java.base/java.lang=ALL-UNNAMED \
-    --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
-    --add-opens java.base/jdk.internal.misc=ALL-UNNAMED \
-    --add-opens java.base/sun.security.action=ALL-UNNAMED \
+  rec="$(tools/graft-java.sh 8g \
     graft.Profile recall /root/testdata/sf0.01 1 2>/dev/null | grep '^RECALL' | tail -1)"
   if [ -n "$rec" ]; then
     summary="$rec $summary"

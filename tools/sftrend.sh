@@ -15,15 +15,7 @@ srctree="$(git rev-parse HEAD:src 2>/dev/null || echo unknown)"
 start="$(date -u +%Y-%m-%dT%H:%M:%SZ)"
 out="$(mktemp)"
 t0=$(date +%s)
-java -Xmx24g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  --add-exports java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens java.base/java.nio=ALL-UNNAMED \
-  --add-opens java.base/java.util=ALL-UNNAMED \
-  --add-opens java.base/java.lang=ALL-UNNAMED \
-  --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens java.base/jdk.internal.misc=ALL-UNNAMED \
-  --add-opens java.base/sun.security.action=ALL-UNNAMED \
-  graft.Profile sftrend "$sf" 1 >"$out" 2>&1
+tools/graft-java.sh 24g graft.Profile sftrend "$sf" 1 >"$out" 2>&1
 rc=$?
 dt=$(( $(date +%s) - t0 ))
 rows="$(grep -E '^SFTREND ' "$out" | tr '\n' ' ')"

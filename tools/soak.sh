@@ -16,15 +16,7 @@ srctree="$(git rev-parse HEAD:src 2>/dev/null || echo unknown)"
 start="$(date -u +%Y-%m-%dT%H:%M:%SZ)"
 out="$(mktemp)"
 t0=$(date +%s)
-java -Xmx24g -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  --add-exports java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens java.base/java.nio=ALL-UNNAMED \
-  --add-opens java.base/java.util=ALL-UNNAMED \
-  --add-opens java.base/java.lang=ALL-UNNAMED \
-  --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens java.base/jdk.internal.misc=ALL-UNNAMED \
-  --add-opens java.base/sun.security.action=ALL-UNNAMED \
-  graft.Profile soakgate "$sf" 1 >"$out" 2>&1
+tools/graft-java.sh 24g graft.Profile soakgate "$sf" 1 >"$out" 2>&1
 rc=$?
 dt=$(( $(date +%s) - t0 ))
 summary="$(grep -E '^SOAKGATE' "$out" | tail -1)"
@@ -32,6 +24,9 @@ if [ $rc -eq 0 ] && [ -n "$summary" ]; then
   echo "$start PASS head=$sha srctree=$srctree sf=$sf reps=$reps secs=$dt $summary" >> tools/soak.log
   echo "soak: GREEN ($summary, ${dt}s)"
 else
+  # a clean exit WITHOUT the SOAKGATE line is still a red gate (output
+  # drift / truncation must not read as green to a && chain)
+  [ $rc -eq 0 ] && rc=1
   echo "$start FAIL head=$sha srctree=$srctree sf=$sf reps=$reps secs=$dt rc=$rc" >> tools/soak.log
   echo "soak: RED. Output tail:"
   tail -40 "$out"
