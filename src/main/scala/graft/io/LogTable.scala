@@ -79,12 +79,13 @@ object LogTable {
     * parquet footer already carries all three in those encodings.
     * `colsD` carries DOUBLE/FLOAT bounds and `colsS` truncated STRING
     * bounds (ASCII-safe, see the bound policy in [[writeData]]).
-    * [[readWhere]] prunes the file list on any of them from the
-    * manifest alone — zero footer reads — and a z-order compaction
-    * turns its 2-D locality into manifest-level skipping on both
-    * dimensions. A column that is all-NULL in a file (or whose bounds
-    * fail the safety policy) carries no entry (no stats → never pruned
-    * on — stats ADMIT, they never guarantee). */
+    * The `graft-log` scan ([[graft.sources.v2.LogTableScanBuilder]])
+    * prunes the file list on any of them from the manifest alone — zero
+    * footer reads — and a z-order compaction turns its 2-D locality into
+    * manifest-level skipping on both dimensions. A column that is
+    * all-NULL in a file (or whose bounds fail the safety policy) carries
+    * no entry (no stats → never pruned on — stats ADMIT, they never
+    * guarantee). */
   final case class FileEntry(
       file: String, minKey: Long, maxKey: Long, rows: Long,
       cols: Map[String, (Long, Long)] = Map.empty,
@@ -985,16 +986,13 @@ object LogTable {
     // inside commit's claim loop ([[requireConstraintsOnSnapshot]]), so
     // every CAS retry re-proves the constraints over the fresh snapshot.
     val delta = set ++ unset.map(_ -> "")
-    if (delta.isEmpty) return
-    def attempt(): Unit = {
+    if (delta.nonEmpty) optimistically { b =>
       val (v, _, sc) = snapshotWithSchema(table, None)
       require(v > 0, s"setProperties($table): table does not exist")
-      commit(table, v, adds = Seq.empty, removes = Seq.empty,
-        reRun = () => attempt(),
+      verdict(commit(table, b, v, adds = Seq.empty, removes = Seq.empty,
         schema = sc.map(_.json).getOrElse(""),
-        keyCol = tableKeyCol(table).getOrElse(""), props = delta)
+        keyCol = tableKeyCol(table).getOrElse(""), props = delta))
     }
-    attempt()
   }
 
   /** True iff the snapshot at `asOf` (head when None) PROVES the key
@@ -1087,27 +1085,7 @@ object LogTable {
         spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), s)
       }
-    // the manifest-committed schema governs the scan: files written
-    // BEFORE a column was added surface it as typed NULLs (parquet
-    // reader fills absent columns), and no per-file footer merge runs —
-    // at 100 TB, schema from the log beats mergeSchema's full footer
-    // sweep by the width of the table
-    val paths = fs.map(f => dataDir(table).resolve(f.file).toString)
-    val base = schema match {
-      case None => spark.read.parquet(paths: _*)
-      case Some(s) if !s.fields.exists(f => physicalName(f) != f.name) =>
-        spark.read.schema(s).parquet(paths: _*)
-      case Some(s) =>
-        // column mapping: files carry PHYSICAL names — scan under the
-        // physical schema (same types and positions) and project back
-        // to the committed logical names; the rename costs an alias,
-        // never a rewrite or an extra pass
-        val phys = org.apache.spark.sql.types.StructType(
-          s.fields.map(f => f.copy(name = physicalName(f))))
-        spark.read.schema(phys).parquet(paths: _*)
-          .select(s.fields.map(f =>
-            col(physicalName(f)).as(f.name)).toIndexedSeq: _*)
-    }
+    val base = scanCommitted(spark, table, fs, schema)
     // deletion vectors, both kinds, applied zero-shuffle:
     //   - KEY vectors (small-delta verbs): rows whose (file, key) pair is
     //     marked dead filter through ONE broadcast anti-join. The dead
@@ -1127,15 +1105,7 @@ object LogTable {
       .flatMap { case (f, ks) => ks.iterator.map(k => (f, k)) }
       .toSeq
     val posLive = dvs.pos.filter { case (f, ss) => names.contains(f) && ss.nonEmpty }
-    // helper-column names must not SHADOW data columns (withColumn
-    // replaces same-named columns and the trailing drop would then
-    // delete user data) — suffix until fresh
-    val taken = base.columns.toSet
-    def fresh(n: String): String = {
-      var c = n
-      while (taken.contains(c)) c += "_"
-      c
-    }
+    val fresh = freshName(base.columns.toSet) _
     // positional helpers attach on the RAW relation: `_metadata` only
     // resolves against the file source, not through the anti-join below
     val needPos = posLive.nonEmpty
@@ -1182,6 +1152,41 @@ object LogTable {
     }
   }
 
+  /** Parquet scan of `fs` under the manifest-committed schema: files
+    * written BEFORE a column was added surface it as typed NULLs
+    * (parquet reader fills absent columns), and no per-file footer merge
+    * runs — at 100 TB, schema from the log beats mergeSchema's full
+    * footer sweep by the width of the table. */
+  private def scanCommitted(
+      spark: SparkSession, table: String, fs: Seq[FileEntry],
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+    val paths = fs.map(f => dataDir(table).resolve(f.file).toString)
+    schema match {
+      case None => spark.read.parquet(paths: _*)
+      case Some(s) if !s.fields.exists(f => physicalName(f) != f.name) =>
+        spark.read.schema(s).parquet(paths: _*)
+      case Some(s) =>
+        // column mapping: files carry PHYSICAL names — scan under the
+        // physical schema (same types and positions) and project back
+        // to the committed logical names; the rename costs an alias,
+        // never a rewrite or an extra pass
+        val phys = org.apache.spark.sql.types.StructType(
+          s.fields.map(f => f.copy(name = physicalName(f))))
+        spark.read.schema(phys).parquet(paths: _*)
+          .select(s.fields.map(f =>
+            col(physicalName(f)).as(f.name)).toIndexedSeq: _*)
+    }
+  }
+
+  /** A helper-column name that does not SHADOW a data column (withColumn
+    * replaces same-named columns and a trailing drop would then delete
+    * user data): suffix `n` until fresh. */
+  private def freshName(taken: Set[String])(n: String): String = {
+    var c = n
+    while (taken.contains(c)) c += "_"
+    c
+  }
+
   /** Create the table with an initial data set (v1). Claims EXACTLY v1
     * — no re-claim loop: two racing creators must not both land (their
     * batches could share keys, and an append-style re-claim would let
@@ -1196,13 +1201,7 @@ object LogTable {
     val adds = writeData(spark, table, df, keyCol)
     val m = Manifest(1L, adds, removes = Seq.empty, schema = df.schema.json,
       keyCol = keyCol, ts = System.currentTimeMillis())
-    val tmp = logDir(table).resolve(s".tmp-${java.util.UUID.randomUUID()}")
-    Files.writeString(tmp, render(m))
-    try Files.createLink(versionPath(table, 1L), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new TableAlreadyExistsException(table)
-    } finally Files.deleteIfExists(tmp)
+    publishFirst(table, m)
   }
 
   /** Create the table with a committed SCHEMA and zero data files (v1)
@@ -1224,13 +1223,7 @@ object LogTable {
     val m = Manifest(1L, adds = Seq.empty, removes = Seq.empty,
       schema = schema.json, keyCol = keyCol, ts = System.currentTimeMillis(),
       props = props)
-    val tmp = logDir(table).resolve(s".tmp-${java.util.UUID.randomUUID()}")
-    Files.writeString(tmp, render(m))
-    try Files.createLink(versionPath(table, 1L), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new TableAlreadyExistsException(table)
-    } finally Files.deleteIfExists(tmp)
+    publishFirst(table, m)
   }
 
   /** Zero-copy table CLONE (the lakehouse SHALLOW CLONE verb, hardened):
@@ -1282,13 +1275,7 @@ object LogTable {
       // a clone of a merge-on-read table silently reverting to
       // copy-on-write would be a policy change nobody asked for
       props = tableProps(src, asOf))
-    val tmp = logDir(dst).resolve(s".tmp-${java.util.UUID.randomUUID()}")
-    Files.writeString(tmp, render(m))
-    try Files.createLink(versionPath(dst, 1L), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new TableAlreadyExistsException(dst)
-    } finally Files.deleteIfExists(tmp)
+    publishFirst(dst, m)
     (files.size, files.map(_.rows).sum)
   }
 
@@ -1350,15 +1337,10 @@ object LogTable {
     val (snapVersion, liveNow, committedSchema) = snapshotWithSchema(table, None)
     require(Files.isDirectory(logDir(table)),
       s"addColumns($table): table does not exist")
-    // pre-evolution logs know their shape only through footers — same
-    // union-across-live-files inference the append path uses
-    val current = committedSchema.orElse {
-      if (liveNow.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true").parquet(
-        liveNow.map(f => dataDir(table).resolve(f.file).toString): _*).schema)
-    }.getOrElse(throw new IllegalStateException(
-      s"addColumns($table): empty pre-evolution table has no committed " +
-        "schema to widen — append data first"))
+    val current = snapshotSchema(spark, table, liveNow, committedSchema)
+      .getOrElse(throw new IllegalStateException(
+        s"addColumns($table): empty pre-evolution table has no committed " +
+          "schema to widen — append data first"))
     val existing = current.fields.map(f => f.name -> f.dataType).toMap
     newCols.foreach { f =>
       existing.get(f.name).filter(_ != f.dataType).foreach { t =>
@@ -1382,10 +1364,11 @@ object LogTable {
     requireNoPhysicalCarriers(table, liveNow, genuinelyNew.map(_.name), "addColumns")
     val widened = org.apache.spark.sql.types.StructType(
       current.fields ++ genuinelyNew)
-    commit(table, snapVersion, adds = Seq.empty, removes = Seq.empty,
-      reRun = () => throw new IllegalStateException(
-        s"addColumns($table) hit a removal conflict — impossible with empty removes"),
-      schema = widened.json)
+    landedOrFail(
+      commit(table, new Budget, snapVersion, adds = Seq.empty, removes = Seq.empty,
+        schema = widened.json),
+      new IllegalStateException(
+        s"addColumns($table) hit a removal conflict — impossible with empty removes"))
   }
 
   /** `ALTER TABLE DROP COLUMN(S)` as ONE narrowing schema-evolution
@@ -1403,23 +1386,23 @@ object LogTable {
     * no-op instead of an error (the SQL IF EXISTS contract). */
   def dropColumns(
       spark: SparkSession, table: String, names: Seq[String],
-      ifExists: Boolean = false): Unit = {
+      ifExists: Boolean = false): Unit = optimistically { b =>
     val (snapVersion, liveNow, committedSchema) = snapshotWithSchema(table, None)
     require(Files.isDirectory(logDir(table)),
       s"dropColumns($table): table does not exist")
-    val current = committedSchema.orElse {
-      if (liveNow.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true").parquet(
-        liveNow.map(f => dataDir(table).resolve(f.file).toString): _*).schema)
-    }.getOrElse(throw new IllegalStateException(
-      s"dropColumns($table): empty pre-evolution table has no committed " +
-        "schema to narrow"))
+    val current = snapshotSchema(spark, table, liveNow, committedSchema)
+      .getOrElse(throw new IllegalStateException(
+        s"dropColumns($table): empty pre-evolution table has no committed " +
+          "schema to narrow"))
     val key = tableKeyCol(table)
     names.foreach { n =>
       if (key.contains(n)) throw new IllegalArgumentException(
         s"dropColumns($table): '$n' is the table's key column — keyed " +
           "writes and manifest pruning depend on it; it cannot drop")
-      if (!current.fieldNames.contains(n) && !ifExists)
+      // a recompute after a racing schema evolution tolerates unknown
+      // names (the racer may have dropped one too) — serial-order
+      // equivalent either way; the first attempt already validated them
+      if (!current.fieldNames.contains(n) && !ifExists && !b.spent)
         throw new IllegalArgumentException(
           s"dropColumns($table): no column '$n' " +
             s"(have ${current.fieldNames.mkString(", ")})")
@@ -1432,16 +1415,13 @@ object LogTable {
     val toDrop = names.toSet
     val narrowed = org.apache.spark.sql.types.StructType(
       current.fields.filterNot(f => toDrop(f.name)))
-    if (narrowed.length == current.length) return // all IF EXISTS misses
-    require(narrowed.nonEmpty,
-      s"dropColumns($table): cannot drop every column")
-    commit(table, snapVersion, adds = Seq.empty, removes = Seq.empty,
-      // a racing schema evolution re-runs the drop against the new head
-      // (ifExists: the racer may have dropped a name too) — serial-order
-      // equivalent either way; names failing validation above already
-      // threw before any commit attempt
-      reRun = () => dropColumns(spark, table, names, ifExists = true),
-      schema = narrowed.json, schemaNarrowing = true)
+    if (narrowed.length == current.length) Some(false) // all IF EXISTS misses
+    else {
+      require(narrowed.nonEmpty,
+        s"dropColumns($table): cannot drop every column")
+      verdict(commit(table, b, snapVersion, adds = Seq.empty, removes = Seq.empty,
+        schema = narrowed.json, schemaNarrowing = true))
+    }
   }
 
   /** SQL `ALTER TABLE RENAME COLUMN` via COLUMN MAPPING (the published
@@ -1478,51 +1458,48 @@ object LogTable {
       spark: SparkSession, table: String, from: String, to: String): Unit = {
     require(from != to, s"renameColumn($table): '$from' -> '$to' is a no-op")
     require(to.nonEmpty, s"renameColumn($table): empty target name")
-    // a stored constraint names the column AS SPELLED AT SET TIME —
-    // renaming underneath it would orphan the expression (and silently
-    // stop enforcing). Refuse; UNSET the constraint first.
-    liveConstraints(table).find(_._2.col == from).foreach { case (n, _) =>
-      throw new IllegalArgumentException(
-        s"renameColumn($table): column '$from' is referenced by " +
-          s"constraint '$n' — UNSET TBLPROPERTIES " +
-          s"('$ConstraintPrefix$n') first")
-    }
-    val (snapVersion, liveNow, committedSchema) = snapshotWithSchema(table, None)
-    require(Files.isDirectory(logDir(table)),
-      s"renameColumn($table): table does not exist")
-    val current = committedSchema.orElse {
-      // pre-evolution table: infer the shape once (same fallback as
-      // addColumns/dropColumns); the inferred names become the physical
-      // names the mapping preserves
-      if (liveNow.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true").parquet(
-        liveNow.map(f => dataDir(table).resolve(f.file).toString): _*).schema)
-    }.getOrElse(throw new IllegalStateException(
-      s"renameColumn($table): empty pre-evolution table has no committed " +
-        "schema to rename in — append data first"))
-    require(current.fieldNames.contains(from),
-      s"renameColumn($table): no column '$from' " +
-        s"(have ${current.fieldNames.mkString(", ")})")
-    require(!current.fieldNames.contains(to),
-      s"renameColumn($table): column '$to' already exists")
-    val renamed = org.apache.spark.sql.types.StructType(current.fields.map { f =>
-      if (f.name == from)
-        org.apache.spark.sql.types.StructField(to, f.dataType, f.nullable,
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(f.metadata)
-            .putString(PhysicalNameKey, physicalName(f)).build())
-      else f
-    })
-    val key = tableKeyCol(table)
-    commit(table, snapVersion, adds = Seq.empty, removes = Seq.empty,
+    optimistically { b =>
+      // a stored constraint names the column AS SPELLED AT SET TIME —
+      // renaming underneath it would orphan the expression (and silently
+      // stop enforcing). Refuse; UNSET the constraint first.
+      liveConstraints(table).find(_._2.col == from).foreach { case (n, _) =>
+        throw new IllegalArgumentException(
+          s"renameColumn($table): column '$from' is referenced by " +
+            s"constraint '$n' — UNSET TBLPROPERTIES " +
+            s"('$ConstraintPrefix$n') first")
+      }
+      val (snapVersion, liveNow, committedSchema) = snapshotWithSchema(table, None)
+      require(Files.isDirectory(logDir(table)),
+        s"renameColumn($table): table does not exist")
+      // pre-evolution table: the inferred names become the physical names
+      // the mapping preserves
+      val current = snapshotSchema(spark, table, liveNow, committedSchema)
+        .getOrElse(throw new IllegalStateException(
+          s"renameColumn($table): empty pre-evolution table has no committed " +
+            "schema to rename in — append data first"))
+      require(current.fieldNames.contains(from),
+        s"renameColumn($table): no column '$from' " +
+          s"(have ${current.fieldNames.mkString(", ")})")
+      require(!current.fieldNames.contains(to),
+        s"renameColumn($table): column '$to' already exists")
+      val renamed = org.apache.spark.sql.types.StructType(current.fields.map { f =>
+        if (f.name == from)
+          org.apache.spark.sql.types.StructField(to, f.dataType, f.nullable,
+            new org.apache.spark.sql.types.MetadataBuilder()
+              .withMetadata(f.metadata)
+              .putString(PhysicalNameKey, physicalName(f)).build())
+        else f
+      })
+      val key = tableKeyCol(table)
       // a rename REMOVES a logical name: the re-claim path's union merge
       // would resurrect the old field beside the new one, so take the
       // narrowing rule — recompute against the racer's head (a racing
       // rename of the same column then fails its own validation loudly)
-      reRun = () => renameColumn(spark, table, from, to),
-      schema = renamed.json,
-      keyCol = if (key.contains(from)) to else key.getOrElse(""),
-      schemaNarrowing = true)
+      verdict(commit(table, b, snapVersion, adds = Seq.empty, removes = Seq.empty,
+        schema = renamed.json,
+        keyCol = if (key.contains(from)) to else key.getOrElse(""),
+        schemaNarrowing = true))
+    }
   }
 
   /** The allowed type-widening promotions (Iceberg's public widening
@@ -1589,39 +1566,37 @@ object LogTable {
     * IF-NOT-EXISTS precedent). */
   def widenColumn(
       spark: SparkSession, table: String, name: String,
-      newType: org.apache.spark.sql.types.DataType): Unit = {
+      newType: org.apache.spark.sql.types.DataType): Unit = optimistically { b =>
     val (snapVersion, liveNow, committedSchema) = snapshotWithSchema(table, None)
     require(Files.isDirectory(logDir(table)),
       s"widenColumn($table): table does not exist")
-    val current = committedSchema.orElse {
-      if (liveNow.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true").parquet(
-        liveNow.map(f => dataDir(table).resolve(f.file).toString): _*).schema)
-    }.getOrElse(throw new IllegalStateException(
-      s"widenColumn($table): empty pre-evolution table has no committed " +
-        "schema to widen — append data first"))
+    val current = snapshotSchema(spark, table, liveNow, committedSchema)
+      .getOrElse(throw new IllegalStateException(
+        s"widenColumn($table): empty pre-evolution table has no committed " +
+          "schema to widen — append data first"))
     val field = current.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
         s"widenColumn($table): no column '$name' " +
           s"(have ${current.fieldNames.mkString(", ")})"))
-    if (field.dataType == newType) return // already that type: no-op
-    require(isWidening(field.dataType, newType),
-      s"widenColumn($table): ${field.dataType.catalogString} -> " +
-        s"${newType.catalogString} is not a widening promotion — allowed: " +
-        "tinyint/smallint/int upward to bigint, float -> double, " +
-        "decimal(p,s) -> decimal(p'>p,s); anything else would fork the " +
-        "log's value history")
-    // field metadata (column-mapping physical name, comments) rides the
-    // widen untouched: the file bytes and their physical name are stable
-    val widened = org.apache.spark.sql.types.StructType(current.fields.map { f =>
-      if (f.name == name) f.copy(dataType = newType) else f
-    })
-    commit(table, snapVersion, adds = Seq.empty, removes = Seq.empty,
+    if (field.dataType == newType) Some(false) // already that type: no-op
+    else {
+      require(isWidening(field.dataType, newType),
+        s"widenColumn($table): ${field.dataType.catalogString} -> " +
+          s"${newType.catalogString} is not a widening promotion — allowed: " +
+          "tinyint/smallint/int upward to bigint, float -> double, " +
+          "decimal(p,s) -> decimal(p'>p,s); anything else would fork the " +
+          "log's value history")
+      // field metadata (column-mapping physical name, comments) rides the
+      // widen untouched: the file bytes and their physical name are stable
+      val widened = org.apache.spark.sql.types.StructType(current.fields.map { f =>
+        if (f.name == name) f.copy(dataType = newType) else f
+      })
       // a racing schema evolution recomputes against the new head (the
       // narrowing rule, as rename: a union merge of narrow-vs-wide
       // fields would be ambiguous; serial re-validation never is)
-      reRun = () => widenColumn(spark, table, name, newType),
-      schema = widened.json, schemaNarrowing = true)
+      verdict(commit(table, b, snapVersion, adds = Seq.empty, removes = Seq.empty,
+        schema = widened.json, schemaNarrowing = true))
+    }
   }
 
   /** Append-only commit: new data files, no removals. Always safe under
@@ -1632,74 +1607,51 @@ object LogTable {
     * commits each micro-batch's survivors this way — a torn multi-file
     * append becomes impossible because the manifest IS the commit. */
   def append(spark: SparkSession, table: String, df: DataFrame, keyCol: String): Unit =
-    append(spark, table, df, keyCol, attemptsLeft = 50)
-
-  /** Bounded-retry body: `attemptsLeft` caps the schema-narrowing-race
-    * recursion (each reRun re-runs the full writeData, orphaning the
-    * previous attempt's staged files) at the same 50-attempt budget the
-    * commit CAS loop uses — a sustained race storm fails loudly instead
-    * of recursing unboundedly. */
-  private def append(
-      spark: SparkSession, table: String, df: DataFrame, keyCol: String,
-      attemptsLeft: Int): Unit = {
-    if (attemptsLeft <= 0)
-      throw new IllegalStateException(
-        s"append($table): schema-narrowing race re-run budget exhausted — " +
-          "a concurrent writer keeps narrowing the schema under this append")
-    if (df.isEmpty) return
-    requireKeyMatch(table, keyCol)
-    val (snapVersion, liveNow, committedSchema) = snapshotWithSchema(table, None)
-    // A PRE-EVOLUTION table (every manifest carries an empty schema) has
-    // live files whose shape the log doesn't know — but line "schema ="
-    // below COMMITS the batch's schema as the table's, and readers apply
-    // the latest committed schema to the whole snapshot. Skipping the
-    // compatibility/union step here would let a narrower batch
-    // permanently hide the legacy files' missing columns (and a same-name
-    // different-type batch poison every later read). Infer the legacy
-    // shape from the live files' parquet footers (one footer read, once
-    // per legacy table — every commit after this carries a schema) and
-    // run the SAME evolution logic.
-    val snapSchema = committedSchema.orElse {
-      if (liveNow.isEmpty) None
-      // mergeSchema: default inference samples ONE footer, so
-      // heterogeneous pre-evolution files could yield a partial schema
-      // and permanently hide a legacy column — the exact failure this
-      // inference exists to close. Union across every live footer.
-      else Some(spark.read.option("mergeSchema", "true").parquet(
-        liveNow.map(f => dataDir(table).resolve(f.file).toString): _*).schema)
+    if (!df.isEmpty) optimistically { b =>
+      requireKeyMatch(table, keyCol)
+      val (snapVersion, liveNow, committedSchema) = snapshotWithSchema(table, None)
+      // A PRE-EVOLUTION table (every manifest carries an empty schema) has
+      // live files whose shape the log doesn't know — but line "schema ="
+      // below COMMITS the batch's schema as the table's, and readers apply
+      // the latest committed schema to the whole snapshot. Skipping the
+      // compatibility/union step here would let a narrower batch
+      // permanently hide the legacy files' missing columns (and a same-name
+      // different-type batch poison every later read). Infer the legacy
+      // shape from the live files' parquet footers (one footer read, once
+      // per legacy table — every commit after this carries a schema) and
+      // run the SAME evolution logic.
+      val snapSchema = snapshotSchema(spark, table, liveNow, committedSchema)
+      // schema evolution on append: the committed schema is the union of
+      // the table's columns and the batch's (new columns surface as typed
+      // NULLs on older files at read time — see readFiles)
+      val evolved = snapSchema match {
+        case Some(sc) =>
+          requireCompatible(sc, df, "append")
+          requireNoPhysicalCarriers(table, liveNow,
+            df.schema.fieldNames.toSeq.filterNot(sc.fieldNames.toSet), "append")
+          // canonical order: the table's columns first (batch-missing ones
+          // as typed NULLs), then any genuinely new columns from the batch
+          val have = df.schema.fieldNames.toSet
+          val tableCols = sc.fields.toSeq.map(f =>
+            if (have(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name))
+          val newCols = df.schema.fieldNames.toSeq
+            .filterNot(sc.fieldNames.toSet).map(col(_))
+          df.select(tableCols ++ newCols: _*)
+        case None => df
+      }
+      val adds = writeData(spark, table, evolved, keyCol)
+      // Stale only when a racer NARROWED the schema under us (drop/rename
+      // landed after our snapshot — removal conflicts stay impossible with
+      // empty removes): the recompute from the fresh head reproduces the
+      // serial drop-then-append outcome (loud refusal when the batch
+      // re-adds a physically-carried column). A stale attempt's staged
+      // files stay as crash-orphans until vacuum.
+      if (adds.isEmpty) Some(false)
+      else verdict(commit(table, b, snapVersion, adds, removes = Seq.empty,
+        // restamp: evolved came through select(), which drops the rename-
+        // mapping metadata a renamed table's committed schema must keep
+        schema = restampMapping(snapSchema, evolved.schema).json, keyCol = keyCol))
     }
-    // schema evolution on append: the committed schema is the union of
-    // the table's columns and the batch's (new columns surface as typed
-    // NULLs on older files at read time — see readFiles)
-    val evolved = snapSchema match {
-      case Some(sc) =>
-        requireCompatible(sc, df, "append")
-        requireNoPhysicalCarriers(table, liveNow,
-          df.schema.fieldNames.toSeq.filterNot(sc.fieldNames.toSet), "append")
-        // canonical order: the table's columns first (batch-missing ones
-        // as typed NULLs), then any genuinely new columns from the batch
-        val have = df.schema.fieldNames.toSet
-        val tableCols = sc.fields.toSeq.map(f =>
-          if (have(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name))
-        val newCols = df.schema.fieldNames.toSeq
-          .filterNot(sc.fieldNames.toSet).map(col(_))
-        df.select(tableCols ++ newCols: _*)
-      case None => df
-    }
-    val adds = writeData(spark, table, evolved, keyCol)
-    if (adds.isEmpty) return
-    // reRun fires when a racer NARROWED the schema under us (drop/rename
-    // landed after our snapshot — removal conflicts stay impossible with
-    // empty removes): recompute from the fresh head, where the evolution
-    // validation reproduces the serial drop-then-append outcome (loud
-    // refusal when the batch re-adds a physically-carried column). The
-    // first attempt's staged files stay as crash-orphans until vacuum.
-    commit(table, snapVersion, adds, removes = Seq.empty,
-      reRun = () => append(spark, table, df, keyCol, attemptsLeft - 1),
-      // restamp: evolved came through select(), which drops the rename-
-      // mapping metadata a renamed table's committed schema must keep
-      schema = restampMapping(snapSchema, evolved.schema).json, keyCol = keyCol)
-  }
 
   /** One committed version's shape, for operator observability
     * ([[history]] / `CALL system.snapshots`). `addedRows` is the
@@ -1811,12 +1763,7 @@ object LogTable {
     val mapping = requireMappingStable(table, writtenMapping,
       "LogTable streaming append sink")
     val (snapVersion, liveNow, committedSchema) = snapshotWithSchema(table, None)
-    val snapSchema = committedSchema.orElse {
-      if (liveNow.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true").parquet(
-        liveNow.map(f => dataDir(table).resolve(f.file).toString): _*).schema)
-    }
-    val evolved = snapSchema match {
+    val evolved = snapshotSchema(spark, table, liveNow, committedSchema) match {
       case Some(sc) =>
         streamSchema.fields.foreach { f =>
           sc.fields.find(_.name == f.name).foreach { ex =>
@@ -1848,41 +1795,28 @@ object LogTable {
     // is free; an empty commit per idle trigger would grow the log
     // unboundedly). In COMPLETE mode an empty state is a real result:
     // the epoch truncates the table.
-    if (adds.isEmpty && !replaceAll) return false
-    if (!replaceAll)
-      commit(table, snapVersion, adds, removes = Seq.empty, reRun = () =>
-        throw new IllegalStateException(
+    if (adds.isEmpty && !replaceAll) false
+    else if (!replaceAll)
+      landedOrFail(
+        commit(table, new Budget, snapVersion, adds, removes = Seq.empty,
+          schema = evolved.json, keyCol = keyCol, txns = Map(appId -> epochId)),
+        new IllegalStateException(
           s"commitStreamingEpoch($table) hit a removal conflict — impossible " +
-            "with empty removes"),
+            "with empty removes"))
+    // Complete output mode: the epoch's state REPLACES the table — one
+    // versioned remove-all+add commit, the continuously-refreshed
+    // materialized-view shape. A racing writer's conflict recomputes the
+    // remove set from the fresh file list (its rows are superseded by
+    // this epoch's complete state anyway); the txn fence still drops
+    // duplicate attempts of the same epoch. keyRange spans everything: a
+    // REPLACE-ALL commit conflicts with ANY racer's adds (a concurrent
+    // append's file must not survive the epoch that replaces the table).
+    else optimistically { b =>
+      val (sv, live, _) = snapshotWithSchema(table, None)
+      verdict(commit(table, b, sv, adds, removes = live.map(_.file),
         schema = evolved.json, keyCol = keyCol,
-        txns = Map(appId -> epochId))
-    else {
-      // Complete output mode: the epoch's state REPLACES the table —
-      // one versioned remove-all+add commit, the continuously-refreshed
-      // materialized-view shape. A racing writer's conflict re-runs
-      // against the fresh file list (its rows are superseded by this
-      // epoch's complete state anyway); the txn fence still drops
-      // duplicate attempts of the same epoch.
-      def attempt(sv: Long, live: Seq[FileEntry]): Boolean = {
-        // when reRun fires, the NESTED attempt's verdict is the real
-        // one (the outer call reports true for "completed via rerun").
-        // keyRange spans everything: a REPLACE-ALL commit conflicts
-        // with ANY racer's adds (a concurrent append's file must not
-        // survive the epoch that replaces the table), so the full-range
-        // added-file check forces the re-run that refreshes the remove
-        // set.
-        var nested: Option[Boolean] = None
-        val direct = commit(table, sv, adds, removes = live.map(_.file),
-          reRun = () => {
-            val (sv2, live2, _) = snapshotWithSchema(table, None)
-            nested = Some(attempt(sv2, live2))
-          },
-          schema = evolved.json, keyCol = keyCol,
-          keyRange = Some((Long.MinValue, Long.MaxValue)),
-          txns = Map(appId -> epochId))
-        nested.getOrElse(direct)
-      }
-      attempt(snapVersion, liveNow)
+        keyRange = Some((Long.MinValue, Long.MaxValue)),
+        txns = Map(appId -> epochId)))
     }
   }
 
@@ -1900,15 +1834,17 @@ object LogTable {
     * (files, rows) of the restored snapshot. */
   def restore(table: String, toVersion: Long): (Int, Long) = {
     requireNotTruncated(table, toVersion)
-    def attempt(): (Int, Long) = {
-      val (headV, liveNow, _) = snapshotWithSchema(table, None)
-      require(toVersion >= 1 && toVersion <= headV,
-        s"restore($table): version $toVersion outside [1, $headV]")
-      val (_, liveThen, schemaThen) = snapshotWithSchema(table, Some(toVersion))
-      var result: Option[(Int, Long)] = None
-      commit(table, headV, adds = liveThen,
+    val headV = version(table)
+    require(toVersion >= 1 && toVersion <= headV,
+      s"restore($table): version $toVersion outside [1, $headV]")
+    // the restored snapshot is immutable history: only the remove set
+    // (the head's live files) is recomputed by a race
+    val (_, liveThen, schemaThen) = snapshotWithSchema(table, Some(toVersion))
+    val dvsThen = liveDvState(table, Some(toVersion))
+    optimistically { b =>
+      val (headNow, liveNow, _) = snapshotWithSchema(table, None)
+      verdict(commit(table, b, headNow, adds = liveThen,
         removes = liveNow.map(_.file),
-        reRun = () => result = Some(attempt()),
         schema = schemaThen.map(_.json).getOrElse(""),
         keyRange = Some((Long.MinValue, Long.MaxValue)),
         keyCol = tableKeyCol(table).getOrElse(""),
@@ -1917,11 +1853,9 @@ object LogTable {
         // rows (fold order per manifest: removes, adds, then dvs). Both
         // kinds; positional sidecars are manifest-referenced so vacuum
         // kept them on disk.
-        dvs = liveDvs(table, Some(toVersion)),
-        dvp = livePosDvs(table, Some(toVersion)))
-      result.getOrElse((liveThen.size, liveThen.map(_.rows).sum))
+        dvs = dvsThen.keys, dvp = dvsThen.pos))
     }
-    attempt()
+    (liveThen.size, liveThen.map(_.rows).sum)
   }
 
   /** `INSERT OVERWRITE` / `mode("overwrite")`: replace the table's
@@ -1935,20 +1869,18 @@ object LogTable {
   def overwriteAll(
       spark: SparkSession, table: String, df: DataFrame, keyCol: String): Unit = {
     requireKeyMatch(table, keyCol)
-    def attempt(): Unit = {
+    optimistically { b =>
       val (snapVersion, liveNow, snapSchema) = snapshotWithSchema(table, None)
       val adds = writeData(spark, table, df, keyCol)
       // full-range keyRange: replace-all conflicts with ANY racer's
       // adds (their file must not survive the overwrite) — the
-      // added-file check forces the re-run that refreshes the removes
-      commit(table, snapVersion, adds, removes = liveNow.map(_.file),
+      // added-file check forces the recompute that refreshes the removes
+      verdict(commit(table, b, snapVersion, adds, removes = liveNow.map(_.file),
         // restamp: the caller's batch schema carries no rename-mapping
         // metadata, but the files were written under physical names
-        reRun = () => attempt(),
         schema = restampMapping(snapSchema, df.schema).json, keyCol = keyCol,
-        keyRange = Some((Long.MinValue, Long.MaxValue)))
+        keyRange = Some((Long.MinValue, Long.MaxValue))))
     }
-    attempt()
   }
 
   /** Keyed upsert (the reference's delete-then-insert, K2/K3): rows of
@@ -1981,35 +1913,16 @@ object LogTable {
       keyCol: String): Unit = {
     requireKeyMatch(table, keyCol)
     val inc = incoming.localCheckpoint(false)
-    def attempt(): Unit = {
-      // driver-held key set: bounded by DvMaxKeys BY CONTRACT (checked
-      // with limit(cap+1), so an oversized batch never materializes)
-      // cast-to-long before collect: Int/Short key columns (which the
-      // SQL delta writer's keyGet tolerates) must work here too — a raw
-      // getLong on an IntegerType row throws ClassCastException
-      // NULLS FIRST ordering makes the bounded sample DETERMINISTIC about
-      // NULLs: if the batch holds any NULL key it is guaranteed inside
-      // the cap+1 sample (sort+limit plans as TakeOrderedAndProject — one
-      // job, no full collect), so the require below enforces the NOT NULL
-      // contract on the FULL frame even when the batch overflows to the
-      // positional bulk path
-      val keyRows = inc.select(col(keyCol).cast("long").as("_k")).distinct()
-        .orderBy(col("_k").asc_nulls_first).limit(DvMaxKeys + 1).collect()
-      // a NULL key must fail with the registration path's remediation
-      // message, not a bare driver NPE from getLong on the null row
-      require(!keyRows.exists(_.isNullAt(0)),
-        s"upsertDV($table): NULL key(s) in the batch — keyed-table keys " +
-          "are NOT NULL (a NULL key can never be upserted, deleted, or " +
-          "merged); fill or filter them before the write")
-      val keys = keyRows.map(_.getLong(0))
-      if (keys.isEmpty) return // empty batch: no-op (P11)
-      if (keys.length > DvMaxKeys) {
-        // BULK batch: same merge-on-read semantics through POSITIONAL
-        // bitmap sidecars — no key budget, keys never collect
-        upsertPositional(spark, table, inc, keyCol)
-        return
-      }
-      val (lo, hi) = (keys.min, keys.max)
+    // driver-held key set: bounded by DvMaxKeys BY CONTRACT; the batch is
+    // checkpointed, so one sample serves every recompute
+    val keys = keySample(inc, keyCol)(
+      s"upsertDV($table): NULL key(s) in the batch — keyed-table keys " +
+        "are NOT NULL (a NULL key can never be upserted, deleted, or " +
+        "merged); fill or filter them before the write")
+    // BULK batch: same merge-on-read semantics through POSITIONAL bitmap
+    // sidecars — no key budget, keys never collect
+    if (keys.length > DvMaxKeys) upsertPositional(spark, table, inc, keyCol)
+    else if (keys.nonEmpty) optimistically { b => // empty batch: no-op (P11)
       val (snapVersion, snapshot, snapSchema) = snapshotWithSchema(table, None)
       snapSchema.foreach { sc =>
         requireCompatible(sc, inc, "upsertDV")
@@ -2023,23 +1936,13 @@ object LogTable {
             s"must equal table columns ${sc.fieldNames.sorted.mkString(",")} — " +
             "align first (evolution goes through upsert/append)")
       }
-      // each touched file gets the slice of keys its range could hold —
-      // marking a key the file never contained is harmless (the
-      // anti-join just misses), so stats-range assignment is exact
-      val dvAdds = snapshot.iterator
-        .filter(f => f.minKey <= hi && f.maxKey >= lo)
-        .map(f => f.file -> keys.iterator
-          .filter(k => k >= f.minKey && k <= f.maxKey).toSeq)
-        .filter(_._2.nonEmpty)
-        .toMap
+      val dvAdds = sliceKeys(snapshot, keys)
       requireDvBudget(table, snapVersion, dvAdds, "upsertDV")
       val adds = writeData(spark, table, inc, keyCol)
-      commit(table, snapVersion, adds, removes = Seq.empty,
-        reRun = () => attempt(),
+      verdict(commit(table, b, snapVersion, adds, removes = Seq.empty,
         schema = snapSchema.map(_.json).getOrElse(inc.schema.json),
-        keyRange = Some((lo, hi)), keyCol = keyCol, dvs = dvAdds)
+        keyRange = Some((keys.min, keys.max)), keyCol = keyCol, dvs = dvAdds))
     }
-    attempt()
   }
 
   /** MERGE-ON-READ multi-clause MERGE — the deletion-vector twin of
@@ -2067,10 +1970,9 @@ object LogTable {
     requireKeyMatch(table, keyCol)
     val src = source.localCheckpoint(false)
     val srcCols = src.columns.toSeq
-    def attempt(bulk: Boolean): Unit = {
-      val bounds = src.agg(min(col(keyCol).cast("long")), max(col(keyCol).cast("long"))).head()
-      if (bounds.isNullAt(0)) return
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    // one attempt at one strategy: inline KEY vectors, or POSITIONAL
+    // sidecars once the dying keys overflow the key budget
+    def mergeOnce(bulk: Boolean, b: Budget, lo: Long, hi: Long): Option[Boolean] = {
       val (snapVersion, snapshot, snapSchema) = snapshotWithSchema(table, None)
       snapSchema.foreach { sc =>
         require(srcCols.toSet == sc.fieldNames.toSet,
@@ -2083,10 +1985,7 @@ object LogTable {
       // the bulk path needs (file, row-index) on the target side; the
       // key path reads plainly — both apply the live vectors
       val (tgt, posCols) =
-        if (touched.isEmpty)
-          (snapSchema.map(sc => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
-            .getOrElse(src.limit(0)), None)
+        if (touched.isEmpty) (emptyLike(spark, snapSchema, src), None)
         else if (bulk) {
           val (df, fc, pc) = scanLiveWithPositions(
             spark, table, touched, snapSchema, dvsLive, keyCol)
@@ -2141,14 +2040,12 @@ object LogTable {
           if (posCols.isEmpty) Map.empty[String, Seq[String]]
           else positionsToSidecars(spark, table, joined.filter(dies)
             .select(col(fc).as("_f"), col(pc).as("_p")))
-        if (entries.isEmpty && appendSrc.isEmpty) return
+        if (entries.isEmpty && appendSrc.isEmpty) return Some(false)
         val adds = writeData(spark, table, appendSrc, keyCol)
-        commit(table, snapVersion, adds, removes = Seq.empty,
-          reRun = () => attempt(bulk = true),
+        return verdict(commit(table, b, snapVersion, adds, removes = Seq.empty,
           schema = snapSchema.map(_.json).getOrElse(src.schema.json),
           keyRange = Some((lo, hi)), keyCol = keyCol, dvp = entries,
-          requireLive = touched.map(_.file))
-        return
+          requireLive = touched.map(_.file)))
       }
       // SOURCE-DECIDABLE fast path: when every WHEN condition references
       // only `_src_` columns (k24's shape — `_src_status = 'F'`), a
@@ -2225,31 +2122,23 @@ object LogTable {
         } else joined.filter(dies)
           .select(col(keyCol).cast("long")).distinct()
           .limit(DvMaxKeys + 1).collect().map(_.getLong(0))
-      if (deadRows.length > DvMaxKeys) { attempt(bulk = true); return }
-      if (deadRows.isEmpty && appendSrc.isEmpty) return
-      val dvAdds =
-        if (deadRows.isEmpty) Map.empty[String, Seq[Long]]
-        else {
-          val (dlo, dhi) = (deadRows.min, deadRows.max)
-          snapshot.iterator
-            .filter(f => f.minKey <= dhi && f.maxKey >= dlo)
-            .map(f => f.file -> deadRows.iterator
-              .filter(k => k >= f.minKey && k <= f.maxKey).toSeq)
-            .filter(_._2.nonEmpty)
-            .toMap
-        }
+      if (deadRows.length > DvMaxKeys) return mergeOnce(bulk = true, b, lo, hi)
+      if (deadRows.isEmpty && appendSrc.isEmpty) return Some(false)
+      val dvAdds = sliceKeys(snapshot, deadRows.toSeq)
       requireDvBudget(table, snapVersion, dvAdds, "mergeDV")
       val adds = writeData(spark, table, appendSrc, keyCol)
-      commit(table, snapVersion, adds, removes = Seq.empty,
-        reRun = () => attempt(bulk = false),
+      verdict(commit(table, b, snapVersion, adds, removes = Seq.empty,
         schema = snapSchema.map(_.json).getOrElse(src.schema.json),
         keyRange = Some((lo, hi)), keyCol = keyCol, dvs = dvAdds,
         // decisions were computed FROM the touched files without
         // removing them — validate they (and their vector state) are
         // unchanged at commit, or recompute
-        requireLive = touched.map(_.file))
+        requireLive = touched.map(_.file)))
     }
-    attempt(bulk = false)
+    // a recompute re-decides the strategy against the fresh snapshot
+    keyBounds(src, keyCol).foreach { case (lo, hi) =>
+      optimistically(mergeOnce(bulk = false, _, lo, hi))
+    }
   }
 
   /** MERGE-ON-READ key delete: mark `keys` dead everywhere their value
@@ -2266,23 +2155,17 @@ object LogTable {
       s"deleteKeysDV($table): ${keys.length} keys > $DvMaxKeys — deletion " +
         "vectors are the small-delta path; use deleteRange/deleteWhere")
     val distinctKeys = keys.distinct
-    val (lo, hi) = (distinctKeys.min, distinctKeys.max)
-    def attempt(): Unit = {
+    optimistically { b =>
       val (snapVersion, snapshot, _) = snapshotWithSchema(table, None)
-      val dvAdds = snapshot.iterator
-        .filter(f => f.minKey <= hi && f.maxKey >= lo)
-        .map(f => f.file -> distinctKeys
-          .filter(k => k >= f.minKey && k <= f.maxKey))
-        .filter(_._2.nonEmpty)
-        .toMap
-      if (dvAdds.isEmpty) return // no file could hold any key: no-op
-      requireDvBudget(table, snapVersion, dvAdds, "deleteKeysDV")
-      commit(table, snapVersion, adds = Seq.empty, removes = Seq.empty,
-        reRun = () => attempt(),
-        keyRange = Some((lo, hi)), keyCol = tableKeyCol(table).getOrElse(""),
-        dvs = dvAdds)
+      val dvAdds = sliceKeys(snapshot, distinctKeys)
+      if (dvAdds.isEmpty) Some(false) // no file could hold any key: no-op
+      else {
+        requireDvBudget(table, snapVersion, dvAdds, "deleteKeysDV")
+        verdict(commit(table, b, snapVersion, adds = Seq.empty, removes = Seq.empty,
+          keyRange = Some((distinctKeys.min, distinctKeys.max)),
+          keyCol = tableKeyCol(table).getOrElse(""), dvs = dvAdds))
+      }
     }
-    attempt()
   }
 
   /** The upsert engine, with optional transactional-epoch fencing
@@ -2295,54 +2178,42 @@ object LogTable {
     requireKeyMatch(table, keyCol)
     // lazy checkpoint: the bounds aggregate right below is the first
     // action and populates the blocks — an EAGER checkpoint would spend
-    // a whole separate job materializing first. Conflict re-runs still
-    // reuse the blocks, which is the point of checkpointing here.
+    // a whole separate job materializing first. Recomputes still reuse
+    // the blocks, which is the point of checkpointing here.
     val inc = incoming.localCheckpoint(false)
-    def attempt(): Boolean = {
-      val bounds = inc.agg(min(col(keyCol).cast("long")), max(col(keyCol).cast("long"))).head()
-      if (bounds.isNullAt(0)) return false // empty batch: no-op (P11)
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      // version and file set pinned TOGETHER: the commit below claims
-      // exactly snapVersion+1 first, so any commit that landed after
-      // this read is detected and validated, never silently skipped
-      val (snapVersion, snapshot, snapSchema) = snapshotWithSchema(table, None)
-      // type drift fails loudly BEFORE unionByName can coerce it away
-      // (long ∪ string would silently widen every key to string)
-      snapSchema.foreach { sc =>
-        requireCompatible(sc, inc, "upsert")
-        requireNoPhysicalCarriers(table, snapshot,
-          inc.schema.fieldNames.toSeq.filterNot(sc.fieldNames.toSet), "upsert")
+    keyBounds(inc, keyCol).exists { case (lo, hi) => // empty batch: no-op (P11)
+      optimistically { b =>
+        // version and file set pinned TOGETHER: the commit below claims
+        // exactly snapVersion+1 first, so any commit that landed after
+        // this read is detected and validated, never silently skipped
+        val (snapVersion, snapshot, snapSchema) = snapshotWithSchema(table, None)
+        // type drift fails loudly BEFORE unionByName can coerce it away
+        // (long ∪ string would silently widen every key to string)
+        snapSchema.foreach { sc =>
+          requireCompatible(sc, inc, "upsert")
+          requireNoPhysicalCarriers(table, snapshot,
+            inc.schema.fieldNames.toSeq.filterNot(sc.fieldNames.toSet), "upsert")
+        }
+        val touched = snapshot.filter(f => f.minKey <= hi && f.maxKey >= lo)
+        val survivors =
+          if (touched.isEmpty) emptyLike(spark, snapSchema, inc)
+          // DVs pinned at the same snapshot: the rewrite reads the LIVE
+          // rows (vectors applied) and its commit removes the files, which
+          // purges their vectors in the same fold step
+          else readFiles(spark, table, touched, snapSchema,
+            liveDvState(table, Some(snapVersion)))
+            .join(inc.select(col(keyCol)), Seq(keyCol), "left_anti")
+        // allowMissingColumns: a batch with a NEW column evolves the
+        // table (survivors carry NULLs); a batch MISSING a table column
+        // keeps it (the batch's rows carry NULLs)
+        val merged = survivors.unionByName(inc, allowMissingColumns = true)
+        val adds = writeData(spark, table, merged, keyCol)
+        verdict(commit(table, b, snapVersion, adds, removes = touched.map(_.file),
+          // restamp: unionByName drops the rename-mapping field metadata
+          schema = restampMapping(snapSchema, merged.schema).json,
+          keyRange = Some((lo, hi)), keyCol = keyCol, txns = txns))
       }
-      val touched = snapshot.filter(f => f.minKey <= hi && f.maxKey >= lo)
-      val survivors =
-        if (touched.isEmpty)
-          // schema-correct empty frame: an upsert that touches no file
-          // must still preserve the table's columns in the committed
-          // schema, not narrow it to the batch's
-          snapSchema.map(sc => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
-            .getOrElse(inc.limit(0))
-        // DVs pinned at the same snapshot: the rewrite reads the LIVE
-        // rows (vectors applied) and its commit removes the files, which
-        // purges their vectors in the same fold step
-        else readFiles(spark, table, touched, snapSchema,
-          liveDvState(table, Some(snapVersion)))
-          .join(inc.select(col(keyCol)), Seq(keyCol), "left_anti")
-      // allowMissingColumns: a batch with a NEW column evolves the
-      // table (survivors carry NULLs); a batch MISSING a table column
-      // keeps it (the batch's rows carry NULLs)
-      val merged = survivors.unionByName(inc, allowMissingColumns = true)
-      val adds = writeData(spark, table, merged, keyCol)
-      // when reRun fires, the NESTED attempt's verdict is the real one
-      var nested: Option[Boolean] = None
-      val direct = commit(table, snapVersion, adds, removes = touched.map(_.file),
-        reRun = () => nested = Some(attempt()),
-        // restamp: unionByName drops the rename-mapping field metadata
-        schema = restampMapping(snapSchema, merged.schema).json,
-        keyRange = Some((lo, hi)), keyCol = keyCol, txns = txns)
-      nested.getOrElse(direct)
     }
-    attempt()
   }
 
   /** One streaming micro-batch as one FENCED KEYED UPSERT (the Update
@@ -2402,74 +2273,35 @@ object LogTable {
     }
     val incoming = spark.read.schema(streamSchema).parquet(
       partFiles.toSeq.sorted.map(staging.resolve(_).toString): _*)
-    // NULLS FIRST: a NULL key is guaranteed inside the bounded sample if
-    // one exists anywhere in the epoch, so the require enforces the
-    // contract on the full frame even for bulk epochs that return None
-    // into the rewrite path (same single TakeOrderedAndProject job)
-    val keyRows = incoming.select(col(keyCol).cast("long").as("_k")).distinct()
-      .orderBy(col("_k").asc_nulls_first).limit(DvMaxKeys + 1).collect()
-    require(!keyRows.exists(_.isNullAt(0)),
+    // the NULL-key contract holds on the full frame even for bulk
+    // epochs that return None into the rewrite path
+    val keys = keySample(incoming, keyCol)(
       s"streaming upsert epoch on $table: NULL key(s) in the batch — " +
         "keyed-table keys are NOT NULL; fill or filter them before the write")
-    val keys = keyRows.map(_.getLong(0))
     if (keys.isEmpty) return Some(false)
     if (keys.length > DvMaxKeys) return None // bulk epoch: rewrite path
-    val (lo, hi) = (keys.min, keys.max)
-    def slice(snapshot: Seq[FileEntry]): Map[String, Seq[Long]] =
-      snapshot.iterator
-        .filter(f => f.minKey <= hi && f.maxKey >= lo)
-        .map(f => f.file -> keys.iterator
-          .filter(k => k >= f.minKey && k <= f.maxKey).toSeq)
-        .filter(_._2.nonEmpty)
-        .toMap
     // accumulation budget probed BEFORE the parts register: past it the
     // epoch takes the rewrite (which purges the vectors — self-healing)
     val acc = liveDvs(table, Some(snapVersion0))
-    val over = slice(snapshot0).exists { case (f, ks) =>
+    val over = sliceKeys(snapshot0, keys).exists { case (f, ks) =>
       acc.get(f).map(_.size.toLong).getOrElse(0L) + ks.size > DvMaxKeys * 4L
     }
     if (over) return None
     val adds = registerStaged(spark, table, staging, streamSchema, keyCol,
       onlyFiles = Some(partFiles))
     if (adds.isEmpty) return Some(false)
-    def attempt(): Boolean = {
+    Some(optimistically { b =>
       val (snapVersion, snapshot, snapSchema) = snapshotWithSchema(table, None)
-      val dvAdds = slice(snapshot)
+      val dvAdds = sliceKeys(snapshot, keys)
       // a racer inflating a file past the budget between the probe and
       // this attempt fails loudly; the restarted query's replay re-probes
       // at the new head and falls back to the rewrite
       requireDvBudget(table, snapVersion, dvAdds, "upsertEpoch")
-      // nested-verdict pattern (see commitStreamingEpoch's Complete
-      // mode): when reRun recomputes, the NESTED attempt's verdict — in
-      // particular a txn-fence duplicate drop — is the real one
-      var nested: Option[Boolean] = None
-      val direct = commit(table, snapVersion, adds, removes = Seq.empty,
-        reRun = () => nested = Some(attempt()),
+      verdict(commit(table, b, snapVersion, adds, removes = Seq.empty,
         schema = snapSchema.map(_.json).getOrElse(streamSchema.json),
-        keyRange = Some((lo, hi)), keyCol = keyCol,
-        txns = Map(appId -> epochId), dvs = dvAdds)
-      nested.getOrElse(direct)
-    }
-    Some(attempt())
-  }
-
-  /** Stats-pruned snapshot read over a key range: only files whose
-    * [minKey, maxKey] intersects [lo, hi] reach the parquet scan — the
-    * log-table analog of partition pruning, decided from the manifest
-    * with ZERO file-footer reads — with the residual row predicate on
-    * top (file stats admit, they don't guarantee). A point lookup on a
-    * 100 TB table opens the one file whose range covers the key. */
-  def readRange(
-      spark: SparkSession, table: String, keyCol: String,
-      lo: Long, hi: Long): DataFrame = {
-    val (v, snapshot, schema) = snapshotWithSchema(table, None)
-    val fs = snapshot.filter(f => f.minKey <= hi && f.maxKey >= lo)
-    if (fs.isEmpty) return spark.emptyDataFrame
-    // committed schema applies here too: a pruned read must not show a
-    // DIFFERENT column set than the full read just because the range
-    // landed on pre-evolution files
-    readFiles(spark, table, fs, schema, liveDvState(table, Some(v)))
-      .filter(col(keyCol) >= lo && col(keyCol) <= hi)
+        keyRange = Some((keys.min, keys.max)), keyCol = keyCol,
+        txns = Map(appId -> epochId), dvs = dvAdds))
+    })
   }
 
   /** Multi-clause MERGE (the lakehouse `MERGE INTO` surface; [[upsert]]
@@ -2496,63 +2328,59 @@ object LogTable {
     requireKeyMatch(table, keyCol)
     val src = source.localCheckpoint(false)
     val srcCols = src.columns.toSeq
-    def attempt(): Unit = {
-      val bounds = src.agg(min(col(keyCol).cast("long")), max(col(keyCol).cast("long"))).head()
-      if (bounds.isNullAt(0)) return
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val (snapVersion, snapshot, snapSchema) = snapshotWithSchema(table, None)
-      // the documented precondition is LOUD: a narrower source would
-      // silently NULL target-only columns on every kept row in a
-      // touched file (the output is projected through the source's
-      // column list)
-      snapSchema.foreach { sc =>
-        require(srcCols.toSet == sc.fieldNames.toSet,
-          s"LogTable merge: source columns ${srcCols.sorted.mkString(",")} must " +
-            s"equal table columns ${sc.fieldNames.sorted.mkString(",")} — align first")
-        requireCompatible(sc, src, "merge")
+    keyBounds(src, keyCol).foreach { case (lo, hi) =>
+      optimistically { b =>
+        val (snapVersion, snapshot, snapSchema) = snapshotWithSchema(table, None)
+        // the documented precondition is LOUD: a narrower source would
+        // silently NULL target-only columns on every kept row in a
+        // touched file (the output is projected through the source's
+        // column list)
+        snapSchema.foreach { sc =>
+          require(srcCols.toSet == sc.fieldNames.toSet,
+            s"LogTable merge: source columns ${srcCols.sorted.mkString(",")} must " +
+              s"equal table columns ${sc.fieldNames.sorted.mkString(",")} — align first")
+          requireCompatible(sc, src, "merge")
+        }
+        val touched = snapshot.filter(f => f.minKey <= hi && f.maxKey >= lo)
+        val tgt =
+          if (touched.isEmpty) emptyLike(spark, snapSchema, src)
+          else readFiles(spark, table, touched, snapSchema,
+            liveDvState(table, Some(snapVersion)))
+        // ONE simultaneous projection, not chained withColumnRenamed: the
+        // fold re-analyzed a growing plan once per source column — pure
+        // per-execution planning cost (and the changes() cyclic-rename
+        // lesson says folds over renames are the fragile spelling anyway)
+        val prefixed = src.select(srcCols.map(c => col(c).as(s"_src_$c")): _*)
+        val joined = tgt.withColumn("_tgt_hit", lit(1))
+          .join(prefixed.withColumn("_src_hit", lit(1)),
+            col(keyCol) === col(s"_src_$keyCol"), "full_outer")
+        val matched = col("_tgt_hit").isNotNull && col("_src_hit").isNotNull
+        // SQL WHEN semantics: a NULL-valued clause is NOT-taken, never a
+        // silent row drop (null would otherwise poison takeSrc/keepTgt)
+        val del = coalesce(
+          deleteWhen.map(e => matched && expr(e)).getOrElse(lit(false)), lit(false))
+        val upd = coalesce(
+          updateWhen.map(e => matched && expr(e)).getOrElse(lit(false)), lit(false))
+        val takeSrc = (matched && !del && upd) ||
+          (col("_tgt_hit").isNull && lit(insertUnmatched))
+        val keepTgt = (matched && !del && !upd) || col("_src_hit").isNull
+        val out = joined
+          .filter(takeSrc || keepTgt)
+          .select(srcCols.map(c =>
+            when(takeSrc, col(s"_src_$c")).otherwise(col(c)).as(c)): _*)
+        val adds = writeData(spark, table, out, keyCol)
+        verdict(commit(table, b, snapVersion, adds, removes = touched.map(_.file),
+          schema = snapSchema.map(_.json).getOrElse(src.schema.json),
+          keyRange = Some((lo, hi)), keyCol = keyCol))
       }
-      val touched = snapshot.filter(f => f.minKey <= hi && f.maxKey >= lo)
-      val tgt =
-        if (touched.isEmpty)
-          snapSchema.map(sc => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
-            .getOrElse(src.limit(0))
-        else readFiles(spark, table, touched, snapSchema,
-          liveDvState(table, Some(snapVersion)))
-      // ONE simultaneous projection, not chained withColumnRenamed: the
-      // fold re-analyzed a growing plan once per source column — pure
-      // per-execution planning cost (and the changes() cyclic-rename
-      // lesson says folds over renames are the fragile spelling anyway)
-      val prefixed = src.select(srcCols.map(c => col(c).as(s"_src_$c")): _*)
-      val joined = tgt.withColumn("_tgt_hit", lit(1))
-        .join(prefixed.withColumn("_src_hit", lit(1)),
-          col(keyCol) === col(s"_src_$keyCol"), "full_outer")
-      val matched = col("_tgt_hit").isNotNull && col("_src_hit").isNotNull
-      // SQL WHEN semantics: a NULL-valued clause is NOT-taken, never a
-      // silent row drop (null would otherwise poison takeSrc/keepTgt)
-      val del = coalesce(
-        deleteWhen.map(e => matched && expr(e)).getOrElse(lit(false)), lit(false))
-      val upd = coalesce(
-        updateWhen.map(e => matched && expr(e)).getOrElse(lit(false)), lit(false))
-      val takeSrc = (matched && !del && upd) ||
-        (col("_tgt_hit").isNull && lit(insertUnmatched))
-      val keepTgt = (matched && !del && !upd) || col("_src_hit").isNull
-      val out = joined
-        .filter(takeSrc || keepTgt)
-        .select(srcCols.map(c =>
-          when(takeSrc, col(s"_src_$c")).otherwise(col(c)).as(c)): _*)
-      val adds = writeData(spark, table, out, keyCol)
-      commit(table, snapVersion, adds, removes = touched.map(_.file),
-        reRun = () => attempt(),
-        schema = snapSchema.map(_.json).getOrElse(src.schema.json),
-        keyRange = Some((lo, hi)), keyCol = keyCol)
     }
-    attempt()
   }
 
-  // ---- stats-pruned reads on ANY stats-bearing column ----
+  // ---- manifest-stats file admission (the graft-log scan's pruning) ----
 
-  /** A typed [lo, hi] window against one manifest stats family. */
+  /** A typed [lo, hi] window against one manifest stats family — the
+    * encoding [[graft.sources.v2.LogTableScanBuilder]] maps pushed
+    * filters onto. */
   private[graft] sealed trait StatBound
   private[graft] final case class LongBound(lo: Long, hi: Long) extends StatBound
   private[graft] final case class DblBound(lo: Double, hi: Double) extends StatBound
@@ -2578,81 +2406,6 @@ object LogTable {
   private[graft] def admitsNull(f: FileEntry, column: String, wantNull: Boolean): Boolean =
     f.colsN.get(column).forall(n => if (wantNull) n > 0 else n < f.rows)
 
-  /** (files admitted, live files) for the last [[readWhere]] — spec/bench
-    * observability of manifest pruning, mirroring PagedOrders' fetched
-    * counter; never control flow. */
-  private[graft] val lastWherePlanned = new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] val lastWhereTotal = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def readWhereBound(
-      spark: SparkSession, table: String, column: String,
-      b: StatBound, residual: org.apache.spark.sql.Column): DataFrame = {
-    val (v, snapshot, schema) = snapshotWithSchema(table, None)
-    // manifest stats are keyed by PHYSICAL names; the caller's column is
-    // logical — map before admission (identity on never-renamed tables)
-    val physCol = schema.flatMap(_.fields.find(_.name == column))
-      .map(physicalName).getOrElse(column)
-    val fs = snapshot.filter(admits(_, physCol, b))
-    lastWhereTotal.set(snapshot.size)
-    lastWherePlanned.set(fs.size)
-    if (fs.isEmpty) return spark.emptyDataFrame
-    readFiles(spark, table, fs, schema, liveDvState(table, Some(v))).filter(residual)
-  }
-
-  /** Stats-pruned read on an INTEGRAL column: files whose manifest
-    * [min, max] for `column` misses [lo, hi] never reach the scan, and
-    * files with no stats for it are conservatively kept. With a
-    * z-order-compacted layout ([[compact]]'s `zorderBy`) this prunes on
-    * BOTH z dimensions from the manifest alone — the lakehouse
-    * data-skipping contract, with zero footer reads. The residual
-    * predicate applies on top (stats admit, they don't guarantee). */
-  def readWhere(
-      spark: SparkSession, table: String, column: String,
-      lo: Long, hi: Long): DataFrame =
-    readWhereBound(spark, table, column, LongBound(lo, hi),
-      col(column) >= lo && col(column) <= hi)
-
-  /** Stats-pruned read on a TIMESTAMP column: the manifest carries epoch
-    * micros (the INT64 footer value), so a watermark window — the
-    * reference's hottest predicate, `order_date > since` — skips files
-    * from the manifest alone. At 100 TB the nightly incremental read
-    * opens the day's files, never the table. */
-  def readWhere(
-      spark: SparkSession, table: String, column: String,
-      lo: java.time.Instant, hi: java.time.Instant): DataFrame = {
-    def micros(i: java.time.Instant): Long =
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    readWhereBound(spark, table, column, LongBound(micros(lo), micros(hi)),
-      col(column) >= lit(java.sql.Timestamp.from(lo)) &&
-        col(column) <= lit(java.sql.Timestamp.from(hi)))
-  }
-
-  /** Stats-pruned read on a DATE column (manifest bounds in epoch days —
-    * the INT32 footer value). */
-  def readWhere(
-      spark: SparkSession, table: String, column: String,
-      lo: java.time.LocalDate, hi: java.time.LocalDate): DataFrame =
-    readWhereBound(spark, table, column, LongBound(lo.toEpochDay, hi.toEpochDay),
-      col(column) >= to_date(lit(lo.toString)) &&
-        col(column) <= to_date(lit(hi.toString)))
-
-  /** Stats-pruned read on a DOUBLE/FLOAT column. */
-  def readWhere(
-      spark: SparkSession, table: String, column: String,
-      lo: Double, hi: Double): DataFrame =
-    readWhereBound(spark, table, column, DblBound(lo, hi),
-      col(column) >= lo && col(column) <= hi)
-
-  /** Stats-pruned read on a STRING column. Manifest bounds are truncated
-    * ASCII (see [[writeData]]'s bound policy) whose ordering agrees with
-    * Spark's UTF8String byte comparison, so admission is conservative
-    * for any query bound. */
-  def readWhere(
-      spark: SparkSession, table: String, column: String,
-      lo: String, hi: String): DataFrame =
-    readWhereBound(spark, table, column, StrBound(lo, hi),
-      col(column) >= lo && col(column) <= hi)
-
   /** Key-range delete (retention expiry, erasure requests — the bulk
     * companion to [[upsert]]'s delete-then-insert). Files FULLY covered
     * by [lo, hi] are dropped by a METADATA-ONLY commit: no read, no
@@ -2666,48 +2419,28 @@ object LogTable {
       lo: Long, hi: Long): Unit = {
     require(lo <= hi, s"deleteRange: empty range [$lo, $hi]")
     requireKeyMatch(table, keyCol)
-    def attempt(): Unit = {
+    optimistically { b =>
       val (snapVersion, snapshot, snapSchema) = snapshotWithSchema(table, None)
       val touched = snapshot.filter(f => f.minKey <= hi && f.maxKey >= lo)
-      if (touched.isEmpty) return
-      val straddling = touched.filterNot(f => lo <= f.minKey && f.maxKey <= hi)
-      // a straddling file always has survivors (its min or max key lies
-      // outside the range), so the rewrite below never produces an
-      // empty add set for a non-empty straddle list
-      val adds =
-        if (straddling.isEmpty) Seq.empty
-        else writeData(spark, table,
-          readFiles(spark, table, straddling, snapSchema,
-            liveDvState(table, Some(snapVersion)))
-            .filter(col(keyCol) < lo || col(keyCol) > hi), keyCol)
-      commit(table, snapVersion, adds, removes = touched.map(_.file),
-        reRun = () => attempt(),
-        schema = snapSchema.map(_.json).getOrElse(""),
-        keyRange = Some((lo, hi)), keyCol = keyCol)
+      if (touched.isEmpty) Some(false)
+      else {
+        val straddling = touched.filterNot(f => lo <= f.minKey && f.maxKey <= hi)
+        // a straddling file always has survivors (its min or max key lies
+        // outside the range), so the rewrite below never produces an
+        // empty add set for a non-empty straddle list
+        val adds =
+          if (straddling.isEmpty) Seq.empty
+          else writeData(spark, table,
+            readFiles(spark, table, straddling, snapSchema,
+              liveDvState(table, Some(snapVersion)))
+              .filter(col(keyCol) < lo || col(keyCol) > hi), keyCol)
+        verdict(commit(table, b, snapVersion, adds, removes = touched.map(_.file),
+          schema = snapSchema.map(_.json).getOrElse(""),
+          keyRange = Some((lo, hi)), keyCol = keyCol))
+      }
     }
-    attempt()
   }
 
-  /** Bin-pack small live files into ~`targetRows`-sized files, clustered
-    * by key (repartitionByRange on the key column, so compacted files
-    * carry tight non-overlapping key stats and [[upsert]]/[[readRange]]
-    * pruning stays sharp). A SEMANTIC NO-OP — same rows, history intact,
-    * time travel to pre-compaction versions still valid — that bounds
-    * the file count after many small appends/upserts (the maintenance
-    * op every log-structured table needs: unmerged, a year of nightly
-    * deltas is 365 tiny files and every scan pays per-file open cost).
-    * Only files under `targetRows` participate; already-right-sized
-    * files are left untouched. Concurrency as [[upsert]] — a racing
-    * writer that rewrote a compaction input forces a recompute against
-    * the fresh snapshot.
-    *
-    * `zorderBy = Some((d1, d2))` clusters the compacted output by the
-    * Morton key of the two dimensions instead of by `keyCol` range
-    * (lakehouse OPTIMIZE ZORDER): each output file owns a contiguous
-    * z-range, so its manifest stats are tight in BOTH dimensions at
-    * once and [[readWhere]] skips files on either — at the cost of
-    * looser primary-key ranges (upsert pruning touches more files), the
-    * same trade the lakehouse command makes. */
   /** General predicate delete — the SQL `DELETE FROM ... WHERE` shape
     * ([[graft.sources.v2.LogTableTable]] bridges Spark's SupportsDelete
     * here; the reference's delete-then-insert issues exactly this,
@@ -2725,43 +2458,21 @@ object LogTable {
     val keyCol = tableKeyCol(table).getOrElse(throw new IllegalArgumentException(
       s"deleteWhere($table): the table predates the key-column property — " +
         "run one keyed write first"))
-    def attempt(): Unit = {
+    optimistically { b =>
       val (snapVersion, snapshot, snapSchema) = snapshotWithSchema(table, None)
       val touched = snapshot.filter(fileAdmit)
-      if (touched.isEmpty) return
-      val survivors = readFiles(spark, table, touched, snapSchema,
-        liveDvState(table, Some(snapVersion)))
-        .filter(!coalesce(rowPredicate, lit(false)))
-      val adds = writeData(spark, table, survivors, keyCol)
-      commit(table, snapVersion, adds, removes = touched.map(_.file),
-        reRun = () => attempt(),
-        schema = snapSchema.map(_.json).getOrElse(""), keyCol = keyCol)
+      if (touched.isEmpty) Some(false)
+      else {
+        val survivors = readFiles(spark, table, touched, snapSchema,
+          liveDvState(table, Some(snapVersion)))
+          .filter(!coalesce(rowPredicate, lit(false)))
+        val adds = writeData(spark, table, survivors, keyCol)
+        verdict(commit(table, b, snapVersion, adds, removes = touched.map(_.file),
+          schema = snapSchema.map(_.json).getOrElse(""), keyCol = keyCol))
+      }
     }
-    attempt()
   }
 
-  /** BULK merge-on-read DELETE via POSITIONAL deletion vectors — the
-    * roaring-bitmap half of the DV surface (Delta's deletion-vector
-    * design; Iceberg v2 position deletes): rows matching `rowPredicate`
-    * in the admitted files are marked dead BY ROW POSITION in per-file
-    * bitmap sidecars under `_dv/`, and the table commits ONE manifest
-    * referencing them — ZERO data files rewritten, no key-count cap
-    * (unlike [[deleteKeysDV]]'s inline key sets, the cost is
-    * O(rows-deleted) BITS off-manifest). The GDPR-bulk shape: a
-    * predicate DELETE touching millions of keys in 10 GB files commits
-    * in seconds; the bytes linger until [[compact]] — the published
-    * formats' trade.
-    *
-    * Distributed end to end: the position scan reads only admitted
-    * files (manifest-stats pruning via `fileAdmit`), positions come from
-    * parquet's own `_metadata.row_index`, per-file bitmaps are built AND
-    * written on executors (one streaming pass per file group — the
-    * driver sees only (file, sidecar-name) pairs, O(#touched files)).
-    * Already-dead rows (key or positional vectors at the pinned
-    * snapshot) never re-mark, which keeps the change feed's net-new
-    * delete images exact. Concurrency: the commit validates the touched
-    * files are still live (`requireLive`) — a racer's rewrite forces a
-    * recompute, never a vector against a dead file. */
   /** Scan `touched` files under the committed schema with live-row
     * filtering (key AND positional vectors applied) and the parquet
     * metadata (file name, row index) attached — the shared front half of
@@ -2772,26 +2483,8 @@ object LogTable {
       dvs: DvState, keyCol: String): (DataFrame, String, String) = {
     val sp = spark
     import sp.implicits._
-    val paths = touched.map(f => dataDir(table).resolve(f.file).toString)
-    // physical scan under the committed schema (the readFiles rules:
-    // logical projection over physical columns on renamed tables)
-    val base = snapSchema match {
-      case None => spark.read.parquet(paths: _*)
-      case Some(s) if !s.fields.exists(f => physicalName(f) != f.name) =>
-        spark.read.schema(s).parquet(paths: _*)
-      case Some(s) =>
-        val phys = org.apache.spark.sql.types.StructType(
-          s.fields.map(f => f.copy(name = physicalName(f))))
-        spark.read.schema(phys).parquet(paths: _*)
-          .select(s.fields.map(f =>
-            col(physicalName(f)).as(f.name)).toIndexedSeq: _*)
-    }
-    val taken = base.columns.toSet
-    def fresh(n: String): String = {
-      var c = n
-      while (taken.contains(c)) c += "_"
-      c
-    }
+    val base = scanCommitted(spark, table, touched, snapSchema)
+    val fresh = freshName(base.columns.toSet) _
     val fCol = fresh("_dvw_file")
     val pCol = fresh("_dvw_pos")
     var df = base
@@ -2854,6 +2547,28 @@ object LogTable {
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
   }
 
+  /** BULK merge-on-read DELETE via POSITIONAL deletion vectors — the
+    * roaring-bitmap half of the DV surface (Delta's deletion-vector
+    * design; Iceberg v2 position deletes): rows matching `rowPredicate`
+    * in the admitted files are marked dead BY ROW POSITION in per-file
+    * bitmap sidecars under `_dv/`, and the table commits ONE manifest
+    * referencing them — ZERO data files rewritten, no key-count cap
+    * (unlike [[deleteKeysDV]]'s inline key sets, the cost is
+    * O(rows-deleted) BITS off-manifest). The GDPR-bulk shape: a
+    * predicate DELETE touching millions of keys in 10 GB files commits
+    * in seconds; the bytes linger until [[compact]] — the published
+    * formats' trade.
+    *
+    * Distributed end to end: the position scan reads only admitted
+    * files (manifest-stats pruning via `fileAdmit`), positions come from
+    * parquet's own `_metadata.row_index`, per-file bitmaps are built AND
+    * written on executors (one streaming pass per file group — the
+    * driver sees only (file, sidecar-name) pairs, O(#touched files)).
+    * Already-dead rows (key or positional vectors at the pinned
+    * snapshot) never re-mark, which keeps the change feed's net-new
+    * delete images exact. Concurrency: the commit validates the touched
+    * files are still live (`requireLive`) — a racer's rewrite forces a
+    * recompute, never a vector against a dead file. */
   def deleteWherePositional(
       spark: SparkSession, table: String,
       fileAdmit: FileEntry => Boolean,
@@ -2861,27 +2576,26 @@ object LogTable {
     val keyCol = tableKeyCol(table).getOrElse(throw new IllegalArgumentException(
       s"deleteWherePositional($table): the table predates the key-column " +
         "property — run one keyed write first"))
-    def attempt(): Unit = {
+    optimistically { b =>
       val (snapVersion, snapshot, snapSchema) = snapshotWithSchema(table, None)
       val touched = snapshot.filter(fileAdmit)
-      if (touched.isEmpty) return
-      val dvs = liveDvState(table, Some(snapVersion))
-      val (df, fCol, pCol) = scanLiveWithPositions(
-        spark, table, touched, snapSchema, dvs, keyCol)
-      val dying = df.filter(coalesce(rowPredicate, lit(false)))
-        .select(col(fCol).as("_f"), col(pCol).as("_p"))
-      val entries = positionsToSidecars(spark, table, dying)
-      if (entries.isEmpty) return // nothing matched: no-op
-      commit(table, snapVersion, adds = Seq.empty, removes = Seq.empty,
-        reRun = () => attempt(),
+      val entries =
+        if (touched.isEmpty) Map.empty[String, Seq[String]]
+        else {
+          val (df, fCol, pCol) = scanLiveWithPositions(spark, table, touched,
+            snapSchema, liveDvState(table, Some(snapVersion)), keyCol)
+          positionsToSidecars(spark, table, df.filter(coalesce(rowPredicate, lit(false)))
+            .select(col(fCol).as("_f"), col(pCol).as("_p")))
+        }
+      if (entries.isEmpty) Some(false) // nothing matched: no-op
+      else verdict(commit(table, b, snapVersion, adds = Seq.empty, removes = Seq.empty,
         schema = snapSchema.map(_.json).getOrElse(""), keyCol = keyCol,
         dvp = entries,
         // decisions are per-(file, position): a racer rewriting any
         // touched file invalidates them — recompute, never attach a
         // vector to a dead file
-        requireLive = touched.map(_.file))
+        requireLive = touched.map(_.file)))
     }
-    attempt()
   }
 
   /** BULK merge-on-read upsert — the positional twin of [[upsertDV]]
@@ -2891,65 +2605,49 @@ object LogTable {
     * data files rewritten. [[upsertDV]] falls back here when its batch
     * exceeds the key budget, so bulk keyed re-syncs stay merge-on-read
     * end to end. Semantics identical to [[upsert]] (the oracle-pinned
-    * delete-then-insert). */
-  def upsertPositional(
-      spark: SparkSession, table: String, incoming: DataFrame,
-      keyCol: String): Unit = {
-    requireKeyMatch(table, keyCol)
-    val inc = incoming.localCheckpoint(false)
-    def attempt(): Unit = {
-      val bounds = inc.agg(min(col(keyCol).cast("long")),
-        max(col(keyCol).cast("long"))).head()
-      if (bounds.isNullAt(0)) return // empty batch: no-op (P11)
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val (snapVersion, snapshot, snapSchema) = snapshotWithSchema(table, None)
-      snapSchema.foreach { sc =>
-        requireCompatible(sc, inc, "upsertPositional")
-        requireNoPhysicalCarriers(table, snapshot,
-          inc.schema.fieldNames.toSeq.filterNot(sc.fieldNames.toSet),
-          "upsertPositional")
-        require(inc.columns.toSet == sc.fieldNames.toSet,
-          s"upsertPositional($table): batch columns " +
-            s"${inc.columns.sorted.mkString(",")} must equal table columns " +
-            s"${sc.fieldNames.sorted.mkString(",")} — align first " +
-            "(evolution goes through upsert/append)")
-      }
-      val touched = snapshot.filter(f => f.minKey <= hi && f.maxKey >= lo)
-      val dvs = liveDvState(table, Some(snapVersion))
-      val entries =
-        if (touched.isEmpty) Map.empty[String, Seq[String]]
-        else {
-          val (df, fCol, pCol) = scanLiveWithPositions(
-            spark, table, touched, snapSchema, dvs, keyCol)
-          // matched = key appears in the batch: a DISTRIBUTED left-semi
-          // join (the whole point of the bulk path — no driver key set)
-          val dying = df
-            .join(inc.select(col(keyCol)).distinct(), Seq(keyCol), "left_semi")
-            .select(col(fCol).as("_f"), col(pCol).as("_p"))
-          positionsToSidecars(spark, table, dying)
+    * delete-then-insert). `inc` is upsertDV's key-matched, checkpointed
+    * batch. */
+  private def upsertPositional(
+      spark: SparkSession, table: String, inc: DataFrame,
+      keyCol: String): Unit =
+    keyBounds(inc, keyCol).foreach { case (lo, hi) =>
+      optimistically { b =>
+        val (snapVersion, snapshot, snapSchema) = snapshotWithSchema(table, None)
+        snapSchema.foreach { sc =>
+          requireCompatible(sc, inc, "upsertPositional")
+          requireNoPhysicalCarriers(table, snapshot,
+            inc.schema.fieldNames.toSeq.filterNot(sc.fieldNames.toSet),
+            "upsertPositional")
+          require(inc.columns.toSet == sc.fieldNames.toSet,
+            s"upsertPositional($table): batch columns " +
+              s"${inc.columns.sorted.mkString(",")} must equal table columns " +
+              s"${sc.fieldNames.sorted.mkString(",")} — align first " +
+              "(evolution goes through upsert/append)")
         }
-      val adds = writeData(spark, table, inc, keyCol)
-      commit(table, snapVersion, adds, removes = Seq.empty,
-        reRun = () => attempt(),
-        schema = snapSchema.map(_.json).getOrElse(inc.schema.json),
-        keyRange = Some((lo, hi)), keyCol = keyCol, dvp = entries,
-        // positions are per-(file, row-index): a racer rewriting any
-        // touched file invalidates them — recompute
-        requireLive = touched.map(_.file))
+        val touched = snapshot.filter(f => f.minKey <= hi && f.maxKey >= lo)
+        val dvs = liveDvState(table, Some(snapVersion))
+        val entries =
+          if (touched.isEmpty) Map.empty[String, Seq[String]]
+          else {
+            val (df, fCol, pCol) = scanLiveWithPositions(
+              spark, table, touched, snapSchema, dvs, keyCol)
+            // matched = key appears in the batch: a DISTRIBUTED left-semi
+            // join (the whole point of the bulk path — no driver key set)
+            val dying = df
+              .join(inc.select(col(keyCol)).distinct(), Seq(keyCol), "left_semi")
+              .select(col(fCol).as("_f"), col(pCol).as("_p"))
+            positionsToSidecars(spark, table, dying)
+          }
+        val adds = writeData(spark, table, inc, keyCol)
+        verdict(commit(table, b, snapVersion, adds, removes = Seq.empty,
+          schema = snapSchema.map(_.json).getOrElse(inc.schema.json),
+          keyRange = Some((lo, hi)), keyCol = keyCol, dvp = entries,
+          // positions are per-(file, row-index): a racer rewriting any
+          // touched file invalidates them — recompute
+          requireLive = touched.map(_.file)))
+      }
     }
-    attempt()
-  }
 
-  /** Replace an explicit file set with new data in one commit — the
-    * group-replacement half of Spark's row-level operations
-    * (UPDATE/MERGE via [[graft.sources.v2.LogTableTable]]): the
-    * operation's search scan planned `removeFiles` at `snapVersion`,
-    * Spark computed the groups' full replacement rows, and this commits
-    * the swap. Unlike the upsert/delete paths there is NO reRun — the
-    * replacement rows were computed by Spark's plan, not ours, so a
-    * conflicting racer (one that rewrote a scanned file) must FAIL the
-    * operation rather than silently recompute half of it; independent
-    * commits still re-claim above the new head via the standard loop. */
   /** `schema` renamed logical → physical per `mapping` — what the DSv2
     * task writers receive on a renamed table, so their parts land with
     * the PHYSICAL names every other data file carries (readers resolve
@@ -2992,6 +2690,16 @@ object LogTable {
     now
   }
 
+  /** Replace an explicit file set with new data in one commit — the
+    * group-replacement half of Spark's row-level operations
+    * (UPDATE/MERGE via [[graft.sources.v2.LogTableTable]]): the
+    * operation's search scan planned `removeFiles` at `snapVersion`,
+    * Spark computed the groups' full replacement rows, and this commits
+    * the swap. Unlike the upsert/delete paths a [[Stale]] commit is NOT
+    * recomputed — the replacement rows were computed by Spark's plan,
+    * not ours, so a conflicting racer (one that rewrote a scanned file)
+    * must FAIL the operation rather than silently recompute half of it;
+    * independent commits still re-claim above the new head. */
   private[graft] def replaceStaged(
       spark: SparkSession, table: String, snapVersion: Long,
       removeFiles: Seq[String], staging: Path,
@@ -3010,19 +2718,13 @@ object LogTable {
       val adds = registerStaged(spark, table, staging,
         physicalized(schema, mapping),
         mapping.getOrElse(keyCol, keyCol), onlyFiles)
-      commit(table, snapVersion, adds, removes = removeFiles,
-        reRun = () => throw new java.util.ConcurrentModificationException(
+      landedOrFail(
+        commit(table, new Budget, snapVersion, adds, removes = removeFiles,
+          schema = restampMapping(snapSchema, schema).json, keyCol = keyCol),
+        new java.util.ConcurrentModificationException(
           s"row-level operation on $table: a concurrent writer rewrote a " +
-            "scanned file — re-run the statement against the new snapshot"),
-        schema = restampMapping(snapSchema, schema).json, keyCol = keyCol)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      if (Files.isDirectory(staging)) {
-        val it = Files.list(staging)
-        try it.iterator().asScala.foreach(Files.deleteIfExists) finally it.close()
-        Files.deleteIfExists(staging)
-      }
-    }
+            "scanned file — re-run the statement against the new snapshot"))
+    } finally sweepStaging(staging)
 
   /** The MERGE-ON-READ twin of [[replaceStaged]], behind the SQL delta
     * write ([[graft.sources.v2.LogDeltaBatchWrite]]): instead of
@@ -3050,16 +2752,7 @@ object LogTable {
       // refuse a rename that landed mid-statement.
       val mapping = requireMappingStable(table, writtenMapping,
         "graft-log merge-on-read write")
-      val loosePlaced: Map[String, Seq[Long]] =
-        if (looseKeys.isEmpty) Map.empty
-        else {
-          val ks = looseKeys.distinct
-          val (lo, hi) = (ks.min, ks.max)
-          snapshot.iterator
-            .filter(f => f.minKey <= hi && f.maxKey >= lo)
-            .map(f => f.file -> ks.filter(k => k >= f.minKey && k <= f.maxKey))
-            .filter(_._2.nonEmpty).toMap
-        }
+      val loosePlaced = sliceKeys(snapshot, looseKeys.distinct)
       val dvAdds = (deadByFile.keySet ++ loosePlaced.keySet).iterator.map { f =>
         f -> (deadByFile.getOrElse(f, Seq.empty) ++
           loosePlaced.getOrElse(f, Seq.empty)).distinct
@@ -3094,24 +2787,18 @@ object LogTable {
         else Some(touched.foldLeft((Long.MaxValue, Long.MinValue)) {
           case ((lo, hi), k) => (math.min(lo, k), math.max(hi, k))
         })
-      commit(table, snapVersion, adds, removes = Seq.empty,
-        reRun = () => throw new java.util.ConcurrentModificationException(
+      landedOrFail(
+        commit(table, new Budget, snapVersion, adds, removes = Seq.empty,
+          schema = restampMapping(snapshotWithSchema(table, None)._3,
+            org.apache.spark.sql.types.StructType(
+              schema.fields.map(_.copy(nullable = true)))).json,
+          keyRange = keyRange, keyCol = keyCol, dvs = dvAdds,
+          requireLive = dvAdds.keys.toSeq),
+        new java.util.ConcurrentModificationException(
           s"merge-on-read statement on $table: a concurrent writer changed " +
             "a scanned file or landed rows in the statement's key range — " +
-            "re-run the statement against the new snapshot"),
-        schema = restampMapping(snapshotWithSchema(table, None)._3,
-          org.apache.spark.sql.types.StructType(
-            schema.fields.map(_.copy(nullable = true)))).json,
-        keyRange = keyRange, keyCol = keyCol, dvs = dvAdds,
-        requireLive = dvAdds.keys.toSeq)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      if (Files.isDirectory(staging)) {
-        val it = Files.list(staging)
-        try it.iterator().asScala.foreach(Files.deleteIfExists) finally it.close()
-        Files.deleteIfExists(staging)
-      }
-    }
+            "re-run the statement against the new snapshot"))
+    } finally sweepStaging(staging)
 
   /** A fresh row-level staging dir under the table's data root (same
     * filesystem as the final location — the per-file move in
@@ -3119,11 +2806,31 @@ object LogTable {
   private[graft] def newStagingDir(table: String): Path =
     Files.createTempDirectory(dataDir(table), ".staging-rlo-")
 
+  /** Bin-pack small live files into ~`targetRows`-sized files, clustered
+    * by key (repartitionByRange on the key column, so compacted files
+    * carry tight non-overlapping key stats and [[upsert]]/scan
+    * pruning stays sharp). A SEMANTIC NO-OP — same rows, history intact,
+    * time travel to pre-compaction versions still valid — that bounds
+    * the file count after many small appends/upserts (the maintenance
+    * op every log-structured table needs: unmerged, a year of nightly
+    * deltas is 365 tiny files and every scan pays per-file open cost).
+    * Only files under `targetRows` participate; already-right-sized
+    * files are left untouched. Concurrency as [[upsert]] — a racing
+    * writer that rewrote a compaction input forces a recompute against
+    * the fresh snapshot.
+    *
+    * `zorderBy = Some((d1, d2))` clusters the compacted output by the
+    * Morton key of the two dimensions instead of by `keyCol` range
+    * (lakehouse OPTIMIZE ZORDER): each output file owns a contiguous
+    * z-range, so its manifest stats are tight in BOTH dimensions at
+    * once and the `graft-log` scan skips files on either — at the cost of
+    * looser primary-key ranges (upsert pruning touches more files), the
+    * same trade the lakehouse command makes. */
   def compact(spark: SparkSession, table: String, keyCol: String,
       targetRows: Long, zorderBy: Option[(String, String)] = None): Unit = {
     require(targetRows >= 1, "targetRows must be >= 1")
     requireKeyMatch(table, keyCol)
-    def attempt(): Unit = {
+    optimistically { b =>
       val (snapVersion, snapshot, snapSchema) = snapshotWithSchema(table, None)
       val dvs = liveDvState(table, Some(snapVersion))
       // DV'd files (key AND positional vectors) join the compaction
@@ -3135,26 +2842,26 @@ object LogTable {
         dvs.keys.contains(f.file) || dvs.pos.contains(f.file)
       val small = snapshot.filter(f => f.rows < targetRows || vectored(f))
       val dvd = small.count(vectored)
-      if (small.size < 2 && dvd == 0) return // nothing to merge
       val total = small.map(_.rows).sum
       val nOut = math.max(1L, (total + targetRows - 1) / targetRows).toInt
-      // idempotence: merging n files into >= n achieves nothing and
-      // would churn forever (compact → two half-full files → compact …)
-      // — unless vectors need purging, which a rewrite always achieves
-      if (small.size <= nOut && dvd == 0) return
-      val input = readFiles(spark, table, small, snapSchema, dvs)
-      val clustered = zorderBy match {
-        case Some((d1, d2)) =>
-          graft.operators.ZOrder.layoutBy(input, col(d1), col(d2), nOut)
-        case None => input.repartitionByRange(nOut, col(keyCol))
+      // nothing to merge — and idempotence: merging n files into >= n
+      // achieves nothing and would churn forever (compact → two
+      // half-full files → compact …) — unless vectors need purging,
+      // which a rewrite always achieves
+      if (dvd == 0 && small.size <= nOut) Some(false)
+      else {
+        val input = readFiles(spark, table, small, snapSchema, dvs)
+        val clustered = zorderBy match {
+          case Some((d1, d2)) =>
+            graft.operators.ZOrder.layoutBy(input, col(d1), col(d2), nOut)
+          case None => input.repartitionByRange(nOut, col(keyCol))
+        }
+        val adds = writeData(spark, table, clustered, keyCol)
+        verdict(commit(table, b, snapVersion, adds, removes = small.map(_.file),
+          schema = snapSchema.map(_.json).getOrElse(""),
+          keyCol = keyCol))
       }
-      val adds = writeData(spark, table, clustered, keyCol)
-      commit(table, snapVersion, adds, removes = small.map(_.file),
-        reRun = () => attempt(),
-        schema = snapSchema.map(_.json).getOrElse(""),
-        keyCol = keyCol)
     }
-    attempt()
   }
 
   /** Change feed for incremental downstream consumers: the row-level
@@ -3321,14 +3028,70 @@ object LogTable {
     Some(inserts.unionByName(deletes))
   }
 
-  /** Write `df` as fresh immutable data files; returns their entries
-    * with key stats PLUS per-column [min, max] for every integral column
-    * (the generalized data-skipping stats [[readWhere]] prunes on).
-    * All stats come from the staged files' parquet FOOTERS, read on the
-    * driver at commit time — ZERO extra Spark jobs and zero data pages
-    * (the earlier spelling ran a second full read of everything just
-    * written; at 100 TB that doubles every commit's I/O). Same stats
-    * source as [[graft.operators.Layout]]'s skipping evaluator. */
+  /** The snapshot's schema: the committed one, or — for a PRE-EVOLUTION
+    * log whose manifests carry none — the union of every live file's
+    * footer schema (mergeSchema: default inference samples ONE footer,
+    * so heterogeneous legacy files could yield a partial schema and
+    * permanently hide a legacy column). None for an empty legacy log. */
+  private def snapshotSchema(
+      spark: SparkSession, table: String, live: Seq[FileEntry],
+      committed: Option[org.apache.spark.sql.types.StructType])
+      : Option[org.apache.spark.sql.types.StructType] =
+    committed.orElse {
+      if (live.isEmpty) None
+      else Some(spark.read.option("mergeSchema", "true").parquet(
+        live.map(f => dataDir(table).resolve(f.file).toString): _*).schema)
+    }
+
+  /** A batch's [min, max] key as longs — one aggregate job; None for an
+    * empty batch (the row-level verbs' no-op, P11). */
+  private def keyBounds(df: DataFrame, keyCol: String): Option[(Long, Long)] = {
+    val r = df.agg(min(col(keyCol).cast("long")), max(col(keyCol).cast("long"))).head()
+    if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
+  }
+
+  /** A batch's distinct keys, bounded at [[DvMaxKeys]] + 1 so an
+    * oversized batch never materializes on the driver (more than
+    * DvMaxKeys back means "bulk"). Cast-to-long before collect: Int/Short
+    * key columns (which the SQL delta writer's keyGet tolerates) must
+    * work too. NULLS FIRST makes the sample DETERMINISTIC about NULLs: a
+    * NULL key anywhere in the batch is guaranteed inside the sample
+    * (sort+limit plans as TakeOrderedAndProject — one job, no full
+    * collect), so the NOT NULL contract fails with `nullKeys` — the
+    * registration path's remediation, not a driver NPE — on the FULL
+    * frame even when the batch overflows to a bulk path. */
+  private def keySample(df: DataFrame, keyCol: String)(nullKeys: => String): Seq[Long] = {
+    val rows = df.select(col(keyCol).cast("long").as("_k")).distinct()
+      .orderBy(col("_k").asc_nulls_first).limit(DvMaxKeys + 1).collect()
+    require(!rows.exists(_.isNullAt(0)), nullKeys)
+    rows.toIndexedSeq.map(_.getLong(0))
+  }
+
+  /** Each snapshot file's slice of the distinct `keys` — the keys its
+    * [minKey, maxKey] could hold, for the file's deletion vector.
+    * Marking a key the file never contained is harmless (the read-side
+    * anti-join just misses), so stats-range assignment is exact. */
+  private def sliceKeys(snapshot: Seq[FileEntry], keys: Seq[Long]): Map[String, Seq[Long]] =
+    if (keys.isEmpty) Map.empty
+    else {
+      val (lo, hi) = (keys.min, keys.max)
+      snapshot.iterator
+        .filter(f => f.minKey <= hi && f.maxKey >= lo)
+        .map(f => f.file -> keys.filter(k => k >= f.minKey && k <= f.maxKey))
+        .filter(_._2.nonEmpty)
+        .toMap
+    }
+
+  /** Schema-correct empty frame: a verb that touches no file must still
+    * carry the table's columns into its committed schema, not narrow it
+    * to the batch's. */
+  private def emptyLike(
+      spark: SparkSession, snapSchema: Option[org.apache.spark.sql.types.StructType],
+      batch: DataFrame): DataFrame =
+    snapSchema.map(sc => spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc))
+      .getOrElse(batch.limit(0))
+
   /** Evolution admits NEW columns only — a batch column that shares a
     * table column's name but not its type would be committed as the new
     * schema and poison every later read of the old files (the parquet
@@ -3461,6 +3224,14 @@ object LogTable {
     }
   }
 
+  /** Write `df` as fresh immutable data files; returns their entries
+    * with key stats PLUS per-column [min, max] for every integral column
+    * (the generalized data-skipping stats the `graft-log` scan prunes on).
+    * All stats come from the staged files' parquet FOOTERS, read on the
+    * driver at commit time — ZERO extra Spark jobs and zero data pages
+    * (the earlier spelling ran a second full read of everything just
+    * written; at 100 TB that doubles every commit's I/O). Same stats
+    * source as [[graft.operators.Layout]]'s skipping evaluator. */
   private def writeData(
       spark: SparkSession, table: String, df: DataFrame, keyCol: String): Seq[FileEntry] = {
     // column mapping: the caller's frame uses LOGICAL names; the file
@@ -3486,14 +3257,18 @@ object LogTable {
         physDf.write.mode("overwrite").parquet(staging.toString)
       }
       registerStaged(spark, table, staging, physDf.schema, physKey)
-    } finally {
-      // drop staging leftovers (_SUCCESS, crc files, any unmoved parts)
+    } finally sweepStaging(staging)
+  }
+
+  /** Delete a staging dir and whatever it still holds (_SUCCESS, crc
+    * files, any unmoved or unregistered parts). */
+  private def sweepStaging(staging: Path): Unit =
+    if (Files.isDirectory(staging)) {
       import scala.jdk.CollectionConverters._
       val it = Files.list(staging)
       try it.iterator().asScala.foreach(Files.deleteIfExists) finally it.close()
       Files.deleteIfExists(staging)
     }
-  }
 
   /** Register staged parquet part files as table data: one footer pass
     * computes per-file row counts + typed column stats (the manifest
@@ -3826,7 +3601,7 @@ object LogTable {
       } catch { case _: java.io.IOException => () }
     }
     // positional-DV sidecars sweep under the same rule: any sidecar NO
-    // manifest references is debris (a reRun's superseded attempt, a
+    // manifest references is debris (a stale attempt's sidecars, a
     // crashed writer) — referenced ones stay for time travel like data
     // files. The grace window guards in-flight writers identically.
     val dvRef = manifests(table).flatMap(_.dvp.valuesIterator.flatten).toSet
@@ -3848,58 +3623,126 @@ object LogTable {
       dvOrphans
   }
 
-  /** Test seam: invoked once at the top of every [[commit]] attempt —
-    * lets a spec deterministically land a racing commit INSIDE another
-    * writer's read-compute-commit window (the race is otherwise a
-    * nondeterministic thread interleaving). Production value is a no-op;
-    * never control flow. */
+  /** Test seam: invoked once at the top of every [[commit]] claim
+    * attempt — lets a spec deterministically land a racing commit INSIDE
+    * another writer's read-compute-commit window (the race is otherwise
+    * a nondeterministic thread interleaving). Production value is a
+    * no-op; never control flow. */
   private[io] var onCommitAttempt: () => Unit = () => ()
 
-  /** Optimistic commit: atomically create version `snapshotVersion + 1`
-    * — the version pinned when the caller read its snapshot, NOT the
-    * current head (re-reading the head here would silently skip
-    * validation of any commit that landed in between: the TOCTOU
-    * LogTableSpec's conflicting-upsert test forces). If the claim is
-    * lost, the conflict check is two-sided, the WriteSerializable core:
+  /** What one [[commit]] call decided. */
+  private sealed trait Outcome
+  /** the manifest is published */
+  private case object Landed extends Outcome
+  /** the transactional-epoch fence dropped it as a duplicate (app, epoch) */
+  private case object Fenced extends Outcome
+  /** a racer changed the read set — the caller must recompute */
+  private case object Stale extends Outcome
+
+  private val CommitAttempts = 50
+
+  /** The claim budget of ONE verb call, shared by [[commit]]'s
+    * re-claims and [[optimistically]]'s recomputes: a storm of either
+    * fails loudly after [[CommitAttempts]] claims instead of recursing
+    * or spinning without bound. */
+  private final class Budget {
+    private var left = CommitAttempts
+    /** true once a claim was spent — every later attempt is a recompute */
+    def spent: Boolean = left < CommitAttempts
+    def claim(table: String): Unit = {
+      if (left <= 0) throw new IllegalStateException(
+        s"LogTable commit on $table lost $CommitAttempts straight races — aborting loudly")
+      left -= 1
+    }
+  }
+
+  /** The ONE recompute loop: `attempt` pins a fresh snapshot, computes
+    * its delta and hands it to [[commit]] with the shared budget; a
+    * [[Stale]] verdict ([[verdict]] → None) re-runs it against the new
+    * head. Returns whether a manifest landed — false for a no-op attempt
+    * or a fenced duplicate epoch. */
+  private def optimistically(attempt: Budget => Option[Boolean]): Boolean = {
+    val budget = new Budget
+    @scala.annotation.tailrec
+    def go(): Boolean = attempt(budget) match {
+      case Some(landed) => landed
+      case None => go()
+    }
+    go()
+  }
+
+  /** An attempt's result for [[optimistically]]: None recomputes. */
+  private def verdict(o: Outcome): Option[Boolean] =
+    if (o == Stale) None else Some(o == Landed)
+
+  /** For the callers that must NOT recompute (their delta was computed
+    * by someone else, or no serial order can make it stale): a
+    * [[Stale]] verdict fails with `stale`. */
+  private def landedOrFail(o: Outcome, stale: => Exception): Boolean =
+    if (o == Stale) throw stale else o == Landed
+
+  /** Publish `m` as version `v`: write it in full under a hidden temp
+    * name (readers only match v########.json), then HARD-LINK it to the
+    * version path — link(2) both fails-if-exists (the optimistic claim)
+    * and exposes complete content in one atomic step, so no reader can
+    * observe a torn manifest. rename(2) is NOT usable here: it silently
+    * replaces an existing winner. Returns whether this call claimed `v`;
+    * the temp file never outlives the call, whatever it throws. */
+  private def publish(table: String, v: Long, m: Manifest): Boolean = {
+    val tmp = logDir(table).resolve(s".tmp-${java.util.UUID.randomUUID()}")
+    try {
+      Files.writeString(tmp, render(m))
+      try { Files.createLink(versionPath(table, v), tmp); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  /** Claim v1 of a new table — no re-claim: the loser of a create race
+    * gets the typed [[TableAlreadyExistsException]]. */
+  private def publishFirst(table: String, m: Manifest): Unit =
+    if (!publish(table, 1L, m)) throw new TableAlreadyExistsException(table)
+
+  /** Optimistic commit: claim version `snapshotVersion + 1` — the
+    * version pinned when the caller read its snapshot, NOT the current
+    * head (re-reading the head here would silently skip validation of
+    * any commit that landed in between: the TOCTOU LogTableSpec's
+    * conflicting-upsert test forces). If the claim is lost, the conflict
+    * check is two-sided, the WriteSerializable core:
     *
     *   - REMOVED files: when an intervening commit removed a file we
-    *     based our delta on, the snapshot is stale — `reRun` recomputes;
+    *     based our delta on, the snapshot is stale — [[Stale]];
     *   - ADDED files: when an intervening commit ADDED a file whose key
     *     range intersects this operation's `keyRange`, re-claiming would
     *     produce a state no serial order allows (two upserts of a key no
     *     existing file covered would BOTH land — duplicate keys; an
     *     append into a just-deleted range would survive the later
-    *     delete) — `reRun` recomputes against the racer's rows. The
+    *     delete) — [[Stale]], recompute against the racer's rows. The
     *     check is manifest arithmetic (minKey/maxKey), zero file reads.
     *
     * Otherwise the read set is untouched and disjoint — re-claim at the
-    * new head. Bounded so a pathological storm fails loudly. */
-  /** Returns true when a manifest landed (directly or through a reRun
-    * recompute), false ONLY when the transactional-epoch fence dropped
-    * this commit as a duplicate of an already-landed (app, epoch). */
+    * new head. Every claim draws on `budget`, so a pathological storm
+    * fails loudly whether it forces re-claims or recomputes. */
   private def commit(
-      table: String, snapshotVersion: Long, adds: Seq[FileEntry],
-      removes: Seq[String], reRun: () => Unit, attempts: Int = 50,
+      table: String, budget: Budget, snapshotVersion: Long, adds: Seq[FileEntry],
+      removes: Seq[String],
       schema: String = "", keyRange: Option[(Long, Long)] = None,
       keyCol: String = "", txns: Map[String, Long] = Map.empty,
       // a NARROWING schema commit (dropColumns) must not take the
       // re-claim path's union merge — the union would re-add the very
-      // fields the commit drops. On any schema race it recomputes from
-      // the new head instead (reRun re-narrows whatever the racer left).
+      // fields the commit drops. On any schema race it is Stale instead
+      // (the recompute re-narrows whatever the racer left).
       schemaNarrowing: Boolean = false,
       dvs: Map[String, Seq[Long]] = Map.empty,
       // READ-SET validation for operations whose commit does not remove
       // the files their decisions were computed from (mergeDV): a racer
       // dropping or vector-deleting rows under any of these files
-      // invalidates the decisions — recompute instead of re-claiming.
+      // invalidates the decisions — Stale instead of re-claiming.
       requireLive: Seq[String] = Seq.empty,
       props: Map[String, String] = Map.empty,
-      dvp: Map[String, Seq[String]] = Map.empty): Boolean = {
-    var expected = snapshotVersion
-    var committedSchema = schema
-    var tries = attempts
-    while (tries > 0) {
-      tries -= 1
+      dvp: Map[String, Seq[String]] = Map.empty): Outcome = {
+    @scala.annotation.tailrec
+    def claimAbove(expected: Long, committedSchema: String): Outcome = {
+      budget.claim(table)
       // transactional-epoch fence, checked on EVERY attempt BEFORE the
       // claim: a rival attempt of the same (app, epoch) may land in the
       // window between the caller's pre-check and this commit (or
@@ -3907,8 +3750,8 @@ object LogTable {
       // snapshot. Without this, a split-brain driver pair could both
       // pass their pre-checks and the second would claim a fresh head
       // cleanly, double-applying the epoch.
-      if (txns.nonEmpty && txns.exists { case (app, e) =>
-        lastTxnEpoch(table, app).exists(_ >= e) }) return false
+      if (txns.exists { case (app, e) => lastTxnEpoch(table, app).exists(_ >= e) })
+        return Fenced
       // write-time constraints, re-checked on EVERY attempt (a racer's
       // ADD CONSTRAINT between attempts is honored): added files must
       // PROVE compliance from their footer stats — zero data reads
@@ -3927,120 +3770,96 @@ object LogTable {
       }
       onCommitAttempt()
       val v = expected + 1
-      val m = Manifest(v, adds, removes, committedSchema, keyCol = keyCol,
-        txns = txns, ts = System.currentTimeMillis(), dvs = dvs,
-        props = props, dvp = dvp)
-      // Publish atomically: fully write the manifest to a hidden temp
-      // name (readers only match v########.json), then HARD-LINK it to
-      // the version path — link(2) both fails-if-exists (the optimistic
-      // claim) and exposes complete content in one atomic step, so no
-      // reader can observe a torn manifest. rename(2) is NOT usable
-      // here: it silently replaces an existing winner.
-      val tmp = logDir(table).resolve(s".tmp-${java.util.UUID.randomUUID()}")
-      Files.writeString(tmp, render(m))
-      try {
-        Files.createLink(versionPath(table, v), tmp)
-        Files.deleteIfExists(tmp)
-        return true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
-          val (headNow, liveFiles, headSchema) = snapshotWithSchema(table, None)
-          // added-file conflict: every manifest above the ORIGINAL
-          // snapshot is a racer's (ours never landed); a checkpoint
-          // manifest in range re-lists old files and may force a
-          // spurious reRun — safe, merely conservative
-          val addedConflict = keyRange.exists { case (lo, hi) =>
-            manifests(table).filter(_.version > snapshotVersion)
-              .exists(_.adds.exists(a => a.minKey <= hi && a.maxKey >= lo))
-          }
-          // a racer attached a DELETION VECTOR to a file we are about to
-          // remove (re-claiming would drop the racer's vector with the
-          // file — a lost delete), or to a file in our validated READ
-          // SET (our decisions predate the racer's row kills): recompute.
-          val dvConflict = (removes.nonEmpty || requireLive.nonEmpty) && {
-            val ours = removes.toSet ++ requireLive
-            manifests(table).filter(_.version > snapshotVersion)
-              .exists(m => m.dvs.keys.exists(ours) || m.dvp.keys.exists(ours))
-          }
-          // a racer attached a vector to a file we're also attaching
-          // one to: safe (vectors union in the fold); a racer REMOVING
-          // a file we're attaching to: our vector folds away with the
-          // file — the racer's rewrite already dropped our keys' rows
-          // or kept them per ITS snapshot, and our keyRange/addedConflict
-          // rule catches the overlapping-range case above.
-          val liveNames = liveFiles.map(_.file).toSet
-          if (!removes.forall(liveNames) || !requireLive.forall(liveNames) ||
-              addedConflict || dvConflict) {
-            // racer rewrote files we based our delta on, or landed rows
-            // inside our key range — recompute
-            reRun()
-            return true
-          }
-          // independent commits landed first; our read set is intact —
-          // re-claim directly above the new head. Schema serializability:
-          // an intervening commit may have EVOLVED the table, and
-          // re-claiming with our pre-race schema would silently revert
-          // the racer's new columns (snapshotWithSchema picks the LATEST
-          // non-empty schema). Merge: the head's fields first, plus any
-          // that only we carry — the same result as either serial order.
-          if (schemaNarrowing && committedSchema.nonEmpty &&
-              headSchema.exists(_.json != committedSchema)) {
-            // a racer evolved the schema under our narrowing commit:
-            // recompute from the head (union-merging would resurrect the
-            // dropped fields; keeping ours would lose the racer's adds)
-            reRun()
-            return true
-          }
-          if (committedSchema.nonEmpty) headSchema.foreach { head =>
-            val ours = org.apache.spark.sql.types.DataType
-              .fromJson(committedSchema)
-              .asInstanceOf[org.apache.spark.sql.types.StructType]
-            // same-name/different-type is a REAL conflict, not a merge:
-            // serial execution would fail addColumns' cannot-re-add check
-            // loudly, so the race must too — keeping the head's field and
-            // dropping ours would silently change the loser's committed
-            // type (ADD COLUMN x LONG racing ADD COLUMN x INT)
-            val headTypes = head.fields.map(f => f.name -> f.dataType).toMap
-            ours.fields.foreach { f =>
-              headTypes.get(f.name).filter(_ != f.dataType).foreach { ht =>
-                throw new IllegalStateException(
-                  s"LogTable commit on $table: schema conflict with a racing " +
-                    s"commit — column '${f.name}' is $ht at the head but " +
-                    s"${f.dataType} in this commit; neither serial order " +
-                    "allows both")
-              }
-            }
-            val headNames = head.fieldNames.toSet
-            val oursOnly = ours.fields.filterNot(f => headNames(f.name))
-            if (oursOnly.nonEmpty) {
-              // a field we carry that the head lacks is EITHER our own
-              // evolution (the head simply predates it — merge keeps
-              // it) OR a RACER'S NARROWING (drop/rename landed after
-              // our snapshot — merging would resurrect the dropped
-              // column over files that still physically carry it, and
-              // for a rename would commit TWO logical fields over one
-              // physical name, breaking every read). Decide against the
-              // schema at OUR snapshot: a field that existed there and
-              // is gone from the head was narrowed by a racer —
-              // recompute, never merge (the re-run sees the narrowed
-              // head and fails or proceeds exactly as the serial order
-              // would).
-              val snapFields = snapshotWithSchema(table, Some(snapshotVersion))
-                ._3.map(_.fieldNames.toSet).getOrElse(Set.empty[String])
-              if (oursOnly.exists(f => snapFields(f.name))) {
-                reRun()
-                return true
-              }
-            }
-            val merged = org.apache.spark.sql.types.StructType(
-              head.fields ++ oursOnly)
-            committedSchema = merged.json
-          }
-          expected = headNow
+      if (publish(table, v, Manifest(v, adds, removes, committedSchema,
+          keyCol = keyCol, txns = txns, ts = System.currentTimeMillis(),
+          dvs = dvs, props = props, dvp = dvp))) return Landed
+      val (headNow, liveFiles, headSchema) = snapshotWithSchema(table, None)
+      // every manifest above the ORIGINAL snapshot is a racer's (ours
+      // never landed)
+      val racers = manifests(table).filter(_.version > snapshotVersion)
+      // added-file conflict: a checkpoint manifest in range re-lists old
+      // files and may force a spurious recompute — safe, merely
+      // conservative
+      val addedConflict = keyRange.exists { case (lo, hi) =>
+        racers.exists(_.adds.exists(a => a.minKey <= hi && a.maxKey >= lo))
+      }
+      // a racer attached a DELETION VECTOR to a file we are about to
+      // remove (re-claiming would drop the racer's vector with the
+      // file — a lost delete), or to a file in our validated READ
+      // SET (our decisions predate the racer's row kills): recompute.
+      // (A racer attaching a vector to a file we also attach one to is
+      // safe — vectors union in the fold; a racer REMOVING such a file
+      // folds our vector away with it, and the keyRange rule above
+      // catches the overlapping-range case.)
+      val dvConflict = (removes.nonEmpty || requireLive.nonEmpty) && {
+        val ours = removes.toSet ++ requireLive
+        racers.exists(m => m.dvs.keys.exists(ours) || m.dvp.keys.exists(ours))
+      }
+      val liveNames = liveFiles.map(_.file).toSet
+      // racer rewrote files we based our delta on, or landed rows
+      // inside our key range
+      if (!removes.forall(liveNames) || !requireLive.forall(liveNames) ||
+          addedConflict || dvConflict) return Stale
+      // independent commits landed first; our read set is intact —
+      // re-claim directly above the new head, under a schema that keeps
+      // the racers' evolution. A racer that evolved the schema under a
+      // NARROWING commit is a recompute (union-merging would resurrect
+      // the dropped fields; keeping ours would lose the racer's adds).
+      if (committedSchema.isEmpty) claimAbove(headNow, committedSchema)
+      else if (schemaNarrowing && headSchema.exists(_.json != committedSchema)) Stale
+      else reclaimSchema(table, snapshotVersion, committedSchema, headSchema) match {
+        case Some(merged) => claimAbove(headNow, merged)
+        case None => Stale
       }
     }
-    throw new IllegalStateException(
-      s"LogTable commit on $table lost ${attempts} straight races — aborting loudly")
+    claimAbove(snapshotVersion, schema)
   }
+
+  /** The schema a re-claim commits above a racer's head. Re-claiming
+    * with our pre-race schema would silently revert the racer's new
+    * columns (snapshotWithSchema picks the LATEST non-empty schema), so
+    * merge: the head's fields first, plus any that only we carry — the
+    * same result as either serial order. None when the race narrowed a
+    * field we still carry (the caller recomputes). */
+  private def reclaimSchema(
+      table: String, snapshotVersion: Long, committedSchema: String,
+      headSchema: Option[org.apache.spark.sql.types.StructType]): Option[String] =
+    headSchema.fold(Option(committedSchema)) { head =>
+      val ours = org.apache.spark.sql.types.DataType
+        .fromJson(committedSchema)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      // same-name/different-type is a REAL conflict, not a merge:
+      // serial execution would fail addColumns' cannot-re-add check
+      // loudly, so the race must too — keeping the head's field and
+      // dropping ours would silently change the loser's committed
+      // type (ADD COLUMN x LONG racing ADD COLUMN x INT)
+      val headTypes = head.fields.map(f => f.name -> f.dataType).toMap
+      ours.fields.foreach { f =>
+        headTypes.get(f.name).filter(_ != f.dataType).foreach { ht =>
+          throw new IllegalStateException(
+            s"LogTable commit on $table: schema conflict with a racing " +
+              s"commit — column '${f.name}' is $ht at the head but " +
+              s"${f.dataType} in this commit; neither serial order " +
+              "allows both")
+        }
+      }
+      val headNames = head.fieldNames.toSet
+      val oursOnly = ours.fields.filterNot(f => headNames(f.name))
+      // a field we carry that the head lacks is EITHER our own
+      // evolution (the head simply predates it — merge keeps it) OR a
+      // RACER'S NARROWING (drop/rename landed after our snapshot —
+      // merging would resurrect the dropped column over files that
+      // still physically carry it, and for a rename would commit TWO
+      // logical fields over one physical name, breaking every read).
+      // Decide against the schema at OUR snapshot: a field that existed
+      // there and is gone from the head was narrowed by a racer —
+      // recompute, never merge (the recompute sees the narrowed head and
+      // fails or proceeds exactly as the serial order would).
+      val snapFields =
+        if (oursOnly.isEmpty) Set.empty[String]
+        else snapshotWithSchema(table, Some(snapshotVersion))
+          ._3.map(_.fieldNames.toSet).getOrElse(Set.empty[String])
+      if (oursOnly.exists(f => snapFields(f.name))) None
+      else Some(org.apache.spark.sql.types.StructType(head.fields ++ oursOnly).json)
+    }
 }

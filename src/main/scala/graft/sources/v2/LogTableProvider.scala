@@ -19,7 +19,8 @@ import graft.io.LogTable
   * `spark.read.format("graft-log").load(path)` (the `graft-log` short
   * name registers via META-INF/services).
   *
-  * What it adds over the Scala API ([[LogTable.read]]/[[LogTable.readWhere]]):
+  * What it adds over the Scala API's full-snapshot [[LogTable.read]] (it
+  * is the engine's ONE stats-pruned read path):
   *
   *   - '''declarative file skipping''': `SupportsPushDownFilters` maps
   *     query predicates onto the manifest's per-column stats
@@ -1571,8 +1572,8 @@ class LogFileReader(part: LogFilePartition) extends PartitionReader[InternalRow]
   // JVM-shared conf (r22): a bare `new Configuration()` re-parsed the
   // XML defaults once per TASK on every graft-log scan; the copy
   // constructor clones the materialized properties without a parse and
-  // stays private to this partition (the reader MUTATES it — it sets
-  // the requested read schema below, so tasks must not share one).
+  // stays private to this partition (readers never share a mutable
+  // conf).
   private val conf =
     new org.apache.hadoop.conf.Configuration(graft.util.Footers.sharedConf)
   private val hPath = new org.apache.hadoop.fs.Path(part.file)
@@ -1685,8 +1686,16 @@ class LogFileReader(part: LogFilePartition) extends PartitionReader[InternalRow]
 
   private val reader: ParquetReader[Group] = projection match {
     case Some(proj) =>
-      conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA, proj.toString)
-      ParquetReader.builder(new GroupReadSupport(), hPath).withConf(conf).build()
+      // the projection goes to the read support as a MessageType, never
+      // through the string-schema conf key: MessageTypeParser cannot
+      // re-read a column name carrying schema punctuation (`{`, `;`, …)
+      // that the file itself stores fine
+      val readSupport = new GroupReadSupport {
+        override def init(context: org.apache.parquet.hadoop.api.InitContext)
+            : org.apache.parquet.hadoop.api.ReadSupport.ReadContext =
+          new org.apache.parquet.hadoop.api.ReadSupport.ReadContext(proj)
+      }
+      ParquetReader.builder(readSupport, hPath).withConf(conf).build()
     case None => null // count-style read: rows come from the footer
   }
 

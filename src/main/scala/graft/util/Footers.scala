@@ -20,13 +20,19 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
   */
 object Footers {
 
-  /** JVM-shared, lazily-materialized default Configuration for readers
-    * that need only "a" local-filesystem conf (the v2 partition
-    * reader's local-mode path): the XML default-resource parse happens
-    * once per JVM instead of once per task. Tasks only read from it;
-    * `Configuration.getProps` is internally synchronized for the
-    * first-load race. */
-  lazy val sharedConf: Configuration = new Configuration()
+  /** JVM-shared, materialized default Configuration for readers that
+    * need only "a" local-filesystem conf (the v2 partition reader's
+    * local-mode path copies it per task): the XML default-resource parse
+    * happens once per JVM instead of once per task. The initializer
+    * forces one property read, so the parse has happened BEFORE any copy
+    * — `new Configuration(sharedConf)` then clones loaded properties
+    * whatever the copy constructor does with an unloaded source. Tasks
+    * only read from it. */
+  lazy val sharedConf: Configuration = {
+    val conf = new Configuration()
+    conf.get("fs.defaultFS")
+    conf
+  }
 
   /** Open a parquet footer reader reusing the input file's conf. */
   def open(in: HadoopInputFile): ParquetFileReader =

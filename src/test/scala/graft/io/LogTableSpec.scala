@@ -20,6 +20,14 @@ class LogTableSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
     df.select("k", "v").collect().map(r => (r.getLong(0), r.getString(1))).toSet
 
+  /** The stats-pruned read path: the `graft-log` DSv2 scan. */
+  private def load(t: String) = spark.read.format("graft-log").load(t)
+
+  /** Live files the last planned `graft-log` scan kept after manifest
+    * pruning (and how many it saw). */
+  private def planned: Int = graft.sources.v2.LogTableScan.lastPlannedFiles.get()
+  private def seen: Int = graft.sources.v2.LogTableScan.lastTotalFiles.get()
+
   test("create/read round-trip and upsert equals the keyed anti-join semantics") {
     val t = tmpTable()
     val base = (1L to 1000L).map(i => (i, s"base$i")).toDF("k", "v")
@@ -182,19 +190,18 @@ class LogTableSpec extends AnyFunSuite {
       "default-clause merge must equal upsert")
   }
 
-  test("readRange prunes to intersecting files from manifest stats alone") {
+  test("key-range scan prunes to intersecting files from manifest stats alone") {
     val t = tmpTable()
     LogTable.create(spark, t,
       (1L to 8000L).map(i => (i, s"v$i")).toDF("k", "v")
         .repartitionByRange(8, col("k")), "k")
     val all = LogTable.read(spark, t).inputFiles.toSet
     assert(all.size >= 8)
-    val ranged = LogTable.readRange(spark, t, "k", 100L, 150L)
-    assert(ranged.inputFiles.toSet.size == 1,
-      s"point-range read opened ${ranged.inputFiles.length} of ${all.size} files")
+    val ranged = load(t).filter(col("k").between(100L, 150L))
     assert(rows(ranged) == (100L to 150L).map(i => (i, s"v$i")).toSet)
+    assert(planned == 1, s"point-range read opened $planned of ${all.size} files")
     // a range past the table reads nothing
-    assert(LogTable.readRange(spark, t, "k", 50000L, 60000L).isEmpty)
+    assert(load(t).filter(col("k").between(50000L, 60000L)).isEmpty)
   }
 
   test("deleteRange: fully-covered files drop metadata-only; straddlers rewrite survivors") {
@@ -244,7 +251,8 @@ class LogTableSpec extends AnyFunSuite {
       s"compaction left ${r.inputFiles.length} files for ~601 rows at target 400")
     // compacted files carry disjoint key ranges: a point read opens one
     // (keys 110-115 sit far from any range-partition boundary)
-    assert(LogTable.readRange(spark, t, "k", 110L, 115L).inputFiles.length == 1)
+    load(t).filter(col("k").between(110L, 115L)).collect()
+    assert(planned == 1)
     // history intact: the pre-compaction snapshot still reads
     assert(rows(LogTable.readVersion(spark, t, preCompactVersion)) == expected)
     // idempotent: nothing small left to merge
@@ -317,7 +325,7 @@ class LogTableSpec extends AnyFunSuite {
       (3L, "gone", "delete")))
   }
 
-  test("per-column manifest stats: readWhere prunes any integral column, keeps stat-less files") {
+  test("per-column manifest stats: the scan prunes any integral column, keeps stat-less files") {
     val t = tmpTable()
     // score correlates with k, so a range layout on k is tight in score too
     val base = (1L to 8000L).map(i => (i, s"v$i", i * 2 + 1)).toDF("k", "v", "score")
@@ -325,19 +333,18 @@ class LogTableSpec extends AnyFunSuite {
     LogTable.create(spark, t, base, "k")
     val all = LogTable.read(spark, t).inputFiles.length
     assert(all >= 8)
-    val pruned = LogTable.readWhere(spark, t, "score", 1001L, 1099L)
-    assert(pruned.inputFiles.length == 1,
-      s"secondary-column read opened ${pruned.inputFiles.length} of $all files")
+    val pruned = load(t).filter(col("score").between(1001L, 1099L))
     assert(pruned.collect().map(_.getAs[Long]("k")).toSet == (500L to 549L).toSet)
+    assert(planned == 1, s"secondary-column read opened $planned of $all files")
     // a manifest written without cols stats (legacy) is conservatively scanned
     import scala.jdk.CollectionConverters._
     val vfile = Files.list(Paths.get(t, "_log")).iterator().asScala.toSeq.head
     Files.writeString(vfile,
       Files.readString(vfile).replaceAll(""","cols":\{[^}]*\}""", ""))
-    val legacy = LogTable.readWhere(spark, t, "score", 1001L, 1099L)
-    assert(legacy.inputFiles.length == all, "stat-less files must not be pruned")
+    val legacy = load(t).filter(col("score").between(1001L, 1099L))
     assert(legacy.collect().map(_.getAs[Long]("k")).toSet == (500L to 549L).toSet,
       "legacy manifests must still answer correctly, just without skipping")
+    assert(planned == all, "stat-less files must not be pruned")
   }
 
   test("z-order compaction: manifest stats prune on BOTH dimensions at once") {
@@ -355,7 +362,8 @@ class LogTableSpec extends AnyFunSuite {
     val before = LogTable.read(spark, t).inputFiles.length
     assert(before >= 16)
     // before compaction: every file spans nearly the full a/b space
-    val preA = LogTable.readWhere(spark, t, "a", 0L, 8191L).inputFiles.length
+    load(t).filter(col("a").between(0L, 8191L)).collect()
+    val preA = planned
     assert(preA == before, s"unclustered layout should prune nothing, pruned to $preA")
 
     // 16 output files → the top FOUR z bits split the space, so a probe
@@ -365,17 +373,19 @@ class LogTableSpec extends AnyFunSuite {
     LogTable.compact(spark, t, "k", targetRows = 256L, zorderBy = Some(("a", "b")))
     val files = LogTable.read(spark, t).inputFiles.length
     assert(files >= 12, s"compaction left only $files files — probe needs more")
-    val qa = LogTable.readWhere(spark, t, "a", 0L, 4095L)   // 1/16 of a-space
-    val qb = LogTable.readWhere(spark, t, "b", 0L, 4095L)   // 1/16 of b-space
-    assert(qa.inputFiles.length * 2 <= files,
-      s"z-layout pruned a-dimension to ${qa.inputFiles.length}/$files — no skipping")
-    assert(qb.inputFiles.length * 2 <= files,
-      s"z-layout pruned b-dimension to ${qb.inputFiles.length}/$files — no skipping")
     // and the answers stay exact
+    val qa = load(t).filter(col("a").between(0L, 4095L))   // 1/16 of a-space
     assert(qa.collect().map(_.getAs[Long]("k")).toSet ==
       rows.filter(r => r._2 <= 4095L).map(_._1).toSet)
+    val qaFiles = planned
+    val qb = load(t).filter(col("b").between(0L, 4095L))   // 1/16 of b-space
     assert(qb.collect().map(_.getAs[Long]("k")).toSet ==
       rows.filter(r => r._3 <= 4095L).map(_._1).toSet)
+    val qbFiles = planned
+    assert(qaFiles * 2 <= files,
+      s"z-layout pruned a-dimension to $qaFiles/$files — no skipping")
+    assert(qbFiles * 2 <= files,
+      s"z-layout pruned b-dimension to $qbFiles/$files — no skipping")
   }
 
   test("schema evolution rides the manifest: added columns surface as NULLs on old files") {
@@ -729,8 +739,8 @@ class LogTableSpec extends AnyFunSuite {
       Files.list(Paths.get(t, "_log")).iterator().next())).adds
     assert(entries.forall(e => e.cols.keySet == Set("k")),
       s"hostile column leaked into stats: ${entries.head.cols.keySet}")
-    // no stats → readWhere keeps every file (conservative) and answers right
-    val r = LogTable.readWhere(spark, t, """weird"{na,me]""", 30L, 60L)
+    // no stats → the scan keeps every file (conservative) and answers right
+    val r = load(t).filter(col("""`weird"{na,me]`""").between(30L, 60L))
     assert(r.collect().map(_.getLong(0)).toSet == (10L to 20L).toSet)
   }
 
@@ -747,29 +757,27 @@ class LogTableSpec extends AnyFunSuite {
     val all = LogTable.read(spark, t).inputFiles.length
     assert(all >= 8)
 
-    val ts = LogTable.readWhere(spark, t, "ts",
-      java.time.Instant.ofEpochSecond(1400L), java.time.Instant.ofEpochSecond(1490L))
-    assert(ts.inputFiles.length == 1,
-      s"timestamp window opened ${ts.inputFiles.length} of $all files")
+    val ts = load(t).filter(col("ts").between(
+      lit(java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1400L))),
+      lit(java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1490L)))))
     assert(ts.collect().map(_.getAs[Long]("k")).toSet == (1400L to 1490L).toSet)
+    assert(planned == 1, s"timestamp window opened $planned of $all files")
 
-    val dy = LogTable.readWhere(spark, t, "day",
-      java.time.LocalDate.ofEpochDay(2400L), java.time.LocalDate.ofEpochDay(2490L))
-    assert(dy.inputFiles.length == 1,
-      s"date window opened ${dy.inputFiles.length} of $all files")
+    val dy = load(t).filter(col("day").between(
+      to_date(lit(java.time.LocalDate.ofEpochDay(2400L).toString)),
+      to_date(lit(java.time.LocalDate.ofEpochDay(2490L).toString))))
     assert(dy.collect().map(_.getAs[Long]("k")).toSet == (2400L to 2490L).toSet)
+    assert(planned == 1, s"date window opened $planned of $all files")
 
-    val dd = LogTable.readWhere(spark, t, "d", 350.05, 359.0)
-    assert(dd.inputFiles.length == 1,
-      s"double window opened ${dd.inputFiles.length} of $all files")
+    val dd = load(t).filter(col("d").between(350.05, 359.0))
     assert(dd.collect().map(_.getAs[Long]("k")).toSet == (3501L to 3590L).toSet)
+    assert(planned == 1, s"double window opened $planned of $all files")
 
     // zero-padded strings order like their numbers, so the layout is
     // tight in s too
-    val ss = LogTable.readWhere(spark, t, "s", "s04400", "s04490")
-    assert(ss.inputFiles.length == 1,
-      s"string window opened ${ss.inputFiles.length} of $all files")
+    val ss = load(t).filter(col("s").between("s04400", "s04490"))
     assert(ss.collect().map(_.getAs[Long]("k")).toSet == (4400L to 4490L).toSet)
+    assert(planned == 1, s"string window opened $planned of $all files")
   }
 
   test("string bounds: long values truncate to a valid window, non-ASCII drops stats, both stay correct") {
@@ -786,8 +794,8 @@ class LogTableSpec extends AnyFunSuite {
       hi >= "prefix-prefix-prefix-prefix-0100",
       s"truncated bounds must still admit every value: ['$lo','$hi']")
     // a window inside the common prefix admits the file and answers right
-    val r = LogTable.readWhere(spark, t,
-      "s", "prefix-prefix-prefix-prefix-0010", "prefix-prefix-prefix-prefix-0020")
+    val r = load(t).filter(col("s").between(
+      "prefix-prefix-prefix-prefix-0010", "prefix-prefix-prefix-prefix-0020"))
     assert(r.collect().map(_.getLong(0)).toSet == (10L to 20L).toSet)
 
     // non-ASCII bounds: stats are dropped (byte order vs UTF-16 order
@@ -798,7 +806,7 @@ class LogTableSpec extends AnyFunSuite {
     val e2 = LogTable.parse(Files.readString(
       Files.list(Paths.get(t2, "_log")).iterator().next())).adds.head
     assert(!e2.colsS.contains("s"), "non-ASCII bounds must not be committed")
-    assert(LogTable.readWhere(spark, t2, "s", "é1", "é2")
+    assert(load(t2).filter(col("s").between("é1", "é2"))
       .collect().map(_.getLong(0)).nonEmpty)
   }
 
@@ -823,6 +831,75 @@ class LogTableSpec extends AnyFunSuite {
     // serializable outcome = append-then-upsert: the upsert's value wins
     assert(k100.head.getString(1) == "ours")
     assert(r.count() == 11L)
+  }
+
+  test("a recompute storm fails loudly: one claim budget bounds re-claims and recomputes") {
+    val t = tmpTable()
+    val base = (1L to 10L).map(i => (i, s"base$i"))
+    LogTable.create(spark, t, base.toDF("k", "v"), "k")
+    // a racer lands a row INSIDE the upsert's key range on each of its
+    // first 60 claim attempts: every lost claim is an added-file
+    // conflict, so every one forces a recompute. The guard keeps the
+    // racer's own commit from re-firing the hook.
+    var racers = 0
+    var inRacer = false
+    LogTable.onCommitAttempt = () =>
+      if (!inRacer && racers < 60) {
+        inRacer = true
+        racers += 1
+        try LogTable.append(spark, t,
+          Seq((100L + racers, s"racer$racers")).toDF("k", "v"), "k")
+        finally inRacer = false
+      }
+    val e =
+      try intercept[IllegalStateException] {
+        LogTable.upsert(spark, t, Seq((5L, "ours"), (500L, "ours")).toDF("k", "v"), "k")
+      } finally LogTable.onCommitAttempt = () => ()
+    assert(e.getMessage.contains("straight races"), e.getMessage)
+    assert(racers == 50, s"the upsert made $racers claim attempts, not one budget's 50")
+    // the storm landed every racer and nothing of the upsert
+    assert(rows(LogTable.read(spark, t)) ==
+      (base ++ (1 to racers).map(i => (100L + i, s"racer$i"))).toSet)
+  }
+
+  test("every row-level verb is all-or-nothing when its commit fails") {
+    val base = (1L to 100L).map(i => (i, s"base$i"))
+    val batch = Seq((5L, "new5"), (150L, "new150")).toDF("k", "v")
+    val verbs: Seq[(String, String => Unit)] = Seq(
+      "upsert" -> (t => LogTable.upsert(spark, t, batch, "k")),
+      "merge" -> (t => LogTable.merge(spark, t, batch, "k")),
+      "upsertDV" -> (t => LogTable.upsertDV(spark, t, batch, "k")),
+      "mergeDV" -> (t => LogTable.mergeDV(spark, t, batch, "k")),
+      "deleteRange" -> (t => LogTable.deleteRange(spark, t, "k", 10L, 60L)),
+      "deleteWhere" -> (t => LogTable.deleteWhere(spark, t, _ => true, col("k") < 10L)),
+      "deleteWherePositional" -> (t =>
+        LogTable.deleteWherePositional(spark, t, _ => true, col("k") < 10L)),
+      "compact" -> (t => LogTable.compact(spark, t, "k", targetRows = 1000L)))
+    verbs.foreach { case (name, verb) =>
+      val t = tmpTable()
+      // two small files, so compact has work to do too
+      LogTable.create(spark, t, base.take(50).toDF("k", "v").coalesce(1), "k")
+      LogTable.append(spark, t, base.drop(50).toDF("k", "v").coalesce(1), "k")
+      val v = LogTable.version(t)
+      LogTable.onCommitAttempt = () => {
+        LogTable.onCommitAttempt = () => ()
+        throw new java.io.IOException(s"injected commit failure in $name")
+      }
+      val e =
+        try intercept[java.io.IOException](verb(t))
+        finally LogTable.onCommitAttempt = () => ()
+      assert(e.getMessage == s"injected commit failure in $name", s"$name: $e")
+      assert(LogTable.version(t) == v, s"$name: a failed commit moved the version")
+      assert(rows(LogTable.read(spark, t)) == base.toSet,
+        s"$name: a failed commit changed what readers see")
+      import scala.jdk.CollectionConverters._
+      val ls = Files.list(Paths.get(t, "_log"))
+      val tmps =
+        try ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith(".tmp-")).toList
+        finally ls.close()
+      assert(tmps.isEmpty, s"$name: a failed commit left $tmps in _log")
+    }
   }
 
   test("append racing a DROP COLUMN never resurrects the dropped column") {
@@ -1062,13 +1139,13 @@ class LogTableSpec extends AnyFunSuite {
       // the matching file on both tables (INT96 files would carry no
       // stats and admit everything)
       for (t <- tables) {
-        LogTable.readWhere(spark, t, "ts",
-          java.time.Instant.parse("2024-01-04T00:00:00Z")
-            .minusSeconds(12 * 3600),
-          java.time.Instant.parse("2024-01-05T00:00:00Z")).collect()
-        assert(LogTable.lastWherePlanned.get() == 1,
-          s"ts window planned ${LogTable.lastWherePlanned.get()} of " +
-            s"${LogTable.lastWhereTotal.get()} files on $t — missing micros stats")
+        load(t).filter(col("ts").between(
+          lit(java.sql.Timestamp.from(java.time.Instant.parse("2024-01-04T00:00:00Z")
+            .minusSeconds(12 * 3600))),
+          lit(java.sql.Timestamp.from(java.time.Instant.parse("2024-01-05T00:00:00Z")))))
+          .collect()
+        assert(planned == 1,
+          s"ts window planned $planned of $seen files on $t — missing micros stats")
       }
     } finally spark.conf.unset(tsKey)
   }
@@ -1353,7 +1430,7 @@ class LogTableSpec extends AnyFunSuite {
     assert(r2.filter(col("k") === 9L).select("label").head().getString(0) == "base9")
     // stats-pruned read by the NEW name (manifest string bounds are
     // keyed by the physical name; admission must map)
-    val w = LogTable.readWhere(spark, t, "label", "base100", "base199")
+    val w = load(t).filter(col("label").between("base100", "base199"))
     assert(w.columns.contains("label"))
     assert(w.filter(col("label") === "base150").count() == 1)
     // the old name stays reserved: every live file physically carries it

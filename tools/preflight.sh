@@ -22,7 +22,9 @@ start="$(date -u +%Y-%m-%dT%H:%M:%SZ)"
 out="$(mktemp)"
 sbt -batch test >"$out" 2>&1
 rc=$?
-summary="$(grep -E '^\[info\] (Tests:|Passed:)|TESTS? FAILED|error' "$out" | tail -3 | tr '\n' ' ')"
+# sbt's own [error] lines only: an unanchored "error" also matched Spark
+# INFO noise such as "Pushed Filters: ... EqualTo(event_type,error)"
+summary="$(grep -E '^\[info\] (Tests:|Passed:)|TESTS? FAILED|^\[error\]' "$out" | tail -3 | tr '\n' ' ')"
 if [ "$dirty" != "0" ]; then
   summary="UNCOMMITTED-SRC-CHANGES=$dirty $summary"
 fi
