@@ -85,8 +85,32 @@ object Run {
   def processRawOrders(spark: SparkSession, raw: org.apache.spark.sql.DataFrame,
       data: String, warehouse: String,
       store: graft.etl.WarehouseStore = graft.etl.ParquetWarehouse)
-      : (Long, Option[java.time.Instant]) = {
-    if (raw.isEmpty) return (0L, None) // P11 empty-batch guard
+      : (Long, Option[java.time.Instant]) =
+    batchFacts(spark, raw, data).fold((0L, Option.empty[java.time.Instant])) { b =>
+      // each fact feeds its upsert twice (key set and union): persisted,
+      // the parse→normalize→enrich→refund lineage runs once per fact
+      val oFinal = b.orders.persist()
+      val iFinal = b.items.persist()
+      try {
+        store.upsert(spark, warehouse, "fct_orders",
+          Load.alignColumns(oFinal, WooSchemas.fctOrders), "order_id")
+        store.upsert(spark, warehouse, "fct_order_items",
+          Load.alignColumns(iFinal, WooSchemas.fctOrderItems), "order_id")
+      } finally { oFinal.unpersist(); iFinal.unpersist() }
+      (b.loaded, b.maxOrderDate)
+    }
+
+  /** One batch's two facts, ready to upsert, and what the harvest saw:
+    * the orders loaded and their max `order_date`. */
+  private[graft] final case class BatchFacts(
+      orders: org.apache.spark.sql.DataFrame,
+      items: org.apache.spark.sql.DataFrame,
+      loaded: Long,
+      maxOrderDate: Option[java.time.Instant])
+
+  /** [[processRawOrders]]' transform: None for an empty batch (P11). */
+  private[graft] def batchFacts(spark: SparkSession,
+      raw: org.apache.spark.sql.DataFrame, data: String): Option[BatchFacts] = {
     // WITHIN-batch key dedup (the reference's dict-keyed-by-id semantics,
     // run.py's page loop): an at-least-once producer or an overlapping
     // re-fetch window can land the same order in two files of ONE
@@ -103,59 +127,63 @@ object Run {
         .filter(col("_dup_rank") === 1)
         .drop("_dup_rank")
     }
+    // The harvest: ONE driver-side action yields the batch's emptiness,
+    // order ids, product ids, size and max order date — a faithful
+    // mirror of the reference's per-batch REST fetch (run.py:33,38),
+    // bounded by batch size BY CONTRACT: the caps turn a misconfigured
+    // backfill (one giant window instead of the windowed walk) into a
+    // loud error instead of a driver OOM. The scale path is the DSv2
+    // paged connector, which never collects.
+    val cap = BatchMaxIds
+    val rows = rawDeduped
+      .select(col("id"), Normalize.orderTs, col("line_items.product_id"))
+      .limit(cap + 1).collect()
+    if (rows.isEmpty) return None
+    val pids = rows.iterator.filterNot(_.isNullAt(2))
+      .flatMap(_.getSeq[java.lang.Long](2)).filter(_ != null)
+      .map(_.longValue).distinct.toIndexedSeq.sorted
+    if (pids.size > cap) throw batchTooLarge(cap, "product ids")
+    if (rows.length > cap) throw batchTooLarge(cap, "order ids")
+    val oids = rows.iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toIndexedSeq
+    val maxOrderDate = rows.iterator.filterNot(_.isNullAt(1))
+      .map(_.getTimestamp(1).toInstant).maxOption
+
     val (orders, items) = Normalize(rawDeduped)
     // per-batch product lookup, chunked like products.py:45 (the fixture
-    // client takes the whole id set; chunking semantics live in S4).
-    // The id harvests below are the ONE driver-side collect on the hot
-    // ETL path — a faithful mirror of the reference's per-batch REST
-    // fetch (run.py:33,38), bounded by batch size BY CONTRACT: the cap
-    // turns a misconfigured backfill (one giant window instead of the
-    // windowed walk) into a loud error instead of a driver OOM. The
-    // scale path is the DSv2 paged connector, which never collects.
-    val pids = collectIdsCapped(
-      items.select("product_id").filter(col("product_id").isNotNull).distinct(),
-      "product ids").sorted
+    // client takes the whole id set; chunking semantics live in S4)
     val products = WooFixtureApi.parse(spark, WooSchemas.rawProduct,
       WooFixtureApi.productJsonsByIds(spark, data, pids))
     val enriched = Enrich.itemsWithCategories(items, products)
-
-    val oids = collectIdsCapped(orders.select("order_id"), "order ids")
     val refunds = WooFixtureApi.parse(spark, WooSchemas.rawRefund,
       WooFixtureApi.refundJsonsForOrders(spark, data, oids))
-    val (oFinal0, iFinal) = Enrich.applyRefunds(orders, enriched, refunds)
-    // oFinal feeds the upsert AND the stats row: without the persist the
-    // parse→normalize→enrich→refund lineage would execute twice
-    val oFinal = oFinal0.persist()
-    try {
-      store.upsert(spark, warehouse, "fct_orders",
-        Load.alignColumns(oFinal, WooSchemas.fctOrders), "order_id")
-      store.upsert(spark, warehouse, "fct_order_items",
-        Load.alignColumns(iFinal, WooSchemas.fctOrderItems), "order_id")
-
-      val stats = oFinal.agg(count(lit(1)), max(col("order_date"))).head()
-      (stats.getLong(0),
-        if (stats.isNullAt(1)) None
-        else Some(stats.getTimestamp(1).toInstant))
-    } finally oFinal.unpersist()
+    val (oFinal, iFinal) = applyBatchRefunds(orders, enriched, refunds)
+    Some(BatchFacts(oFinal, iFinal, rows.length.toLong, maxOrderDate))
   }
 
-  /** Driver-harvest budget for the per-batch id collects (env-tunable
-    * via graft.batch.maxIds). Typical nightly windows carry thousands of
+  /** One batch's refund application over both facts (reference
+    * `enrich.py:26-73`). A batch's refunds are at most its own orders':
+    * both refund sides broadcast. Left to the planner, each join would
+    * hash-shuffle both of its sides (a parsed batch carries no size
+    * estimate), and AQE would convert it only after both shuffle stages
+    * had run. */
+  private[graft] def applyBatchRefunds(orders: org.apache.spark.sql.DataFrame,
+      items: org.apache.spark.sql.DataFrame, rawRefunds: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+    (Enrich.applyOrderRefunds(orders, broadcast(Enrich.refundOrderTotals(rawRefunds))),
+     Enrich.applyItemRefunds(items, broadcast(Enrich.refundItemTotals(rawRefunds))))
+
+  /** Driver-harvest budget for the per-batch ids (env-tunable via
+    * graft.batch.maxIds). Typical nightly windows carry thousands of
     * ids; a million-id harvest means the caller pointed a whole-history
     * backfill at the per-batch path. */
   private[graft] def BatchMaxIds: Int =
     sys.props.get("graft.batch.maxIds").map(_.toInt).getOrElse(1000000)
 
-  private def collectIdsCapped(
-      df: org.apache.spark.sql.DataFrame, what: String): IndexedSeq[Long] = {
-    val rows = df.limit(BatchMaxIds + 1).collect()
-    if (rows.length > BatchMaxIds) throw new IllegalStateException(
-      s"processRawOrders: batch carries > $BatchMaxIds distinct $what — " +
-        "the per-batch driver-side API emulation cannot hold this window; " +
-        "run a windowed backfill (--backfill-start) or raise " +
-        "graft.batch.maxIds")
-    rows.map(_.getLong(0)).toIndexedSeq
-  }
+  private def batchTooLarge(cap: Int, what: String) = new IllegalStateException(
+    s"processRawOrders: batch carries > $cap distinct $what — " +
+      "the per-batch driver-side API emulation cannot hold this window; " +
+      "run a windowed backfill (--backfill-start) or raise " +
+      "graft.batch.maxIds")
 
   private val IsoLocal = java.time.format.DateTimeFormatter
     .ofPattern("yyyy-MM-dd HH:mm:ss").withZone(java.time.ZoneOffset.UTC)

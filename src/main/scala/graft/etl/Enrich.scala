@@ -75,8 +75,10 @@ object Enrich {
   /** J2 + P5 — orders ⟕ refund totals; missing → 0.0;
     * net_after_refunds = net_total − refund_total
     * (reference `enrich.py:43-51`). Refund volume scales with order volume,
-    * so no broadcast hint — AQE broadcasts when the aggregated side is
-    * small, shuffles on order_id otherwise. */
+    * so no broadcast hint here — AQE broadcasts when the aggregated side
+    * is small, shuffles on order_id otherwise. A caller that knows its
+    * refunds are one small batch's hints them at its call site, as
+    * `graft.Run.applyBatchRefunds` does for both refund joins. */
   def applyOrderRefunds(orders: DataFrame, refundTotals: DataFrame): DataFrame =
     orders
       .drop("refund_total", "net_after_refunds")
@@ -113,14 +115,5 @@ object Enrich {
         case c @ ("refunded_quantity" | "refunded_total") => col(c)
         case c => items(c)
       }.toIndexedSeq: _*)
-  }
-
-  /** Full refund application over both facts (reference `enrich.py:26-73`). */
-  def applyRefunds(
-      orders: DataFrame,
-      items: DataFrame,
-      rawRefunds: DataFrame): (DataFrame, DataFrame) = {
-    (applyOrderRefunds(orders, refundOrderTotals(rawRefunds)),
-     applyItemRefunds(items, refundItemTotals(rawRefunds)))
   }
 }

@@ -17,10 +17,13 @@ object Load {
     * touched orders — the reference's removed-line-item semantics
     * (`duckdb_client.py:65-67`).
     *
-    * The anti-join shuffles on the key; at 100 TB the win is that only the
-    * key columns of `incoming` cross the wire for the probe side (distinct
-    * key projection below), and AQE broadcasts it when the batch is small
-    * relative to the table. */
+    * The anti-join hash-shuffles `existing` on the key, and only the key
+    * columns of `incoming` reach the join (distinct key projection
+    * below). When `incoming` is a persisted per-batch fact, AQE
+    * broadcasts the key set once the cache stage has measured it — after
+    * the existing side's shuffle stage, submitted alongside, has run.
+    * That shuffle also re-clusters the rewritten table into the shuffle
+    * partition count, so files do not accrete one per upsert. */
   def upsert(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame = {
     val keySet = incoming.select(keys.map(col).toIndexedSeq: _*).distinct()
     existing
@@ -105,7 +108,7 @@ object Load {
     val target = new org.apache.hadoop.fs.Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     stagedSwap("upsertParquet", fs, target) { staged =>
-      val existing = spark.read.parquet(path)
+      val existing = readParquet(spark, path)
       upsert(existing, incoming, keys).write.mode(SaveMode.Overwrite)
         .parquet(staged.toString)
       true
@@ -115,6 +118,16 @@ object Load {
     if (!fs.exists(target))
       incoming.write.mode(SaveMode.ErrorIfExists).parquet(path)
   }
+
+  /** `spark.read.parquet(path)` under the schema the table's writer
+    * recorded in a data file's footer ([[graft.util.Footers.sparkSchema]]):
+    * the same schema inference would find, without the inference job it
+    * launches on every read. One footer speaks for the table: every
+    * write here (bootstrap, upsert, compact) rewrites it whole. Falls
+    * back to inference when no footer carries the schema. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    graft.util.Footers.sparkSchema(spark.sparkContext.hadoopConfiguration, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   /** Warehouse maintenance: COMPACT a flat parquet table's accreted
     * small files into ~`targetBytes` outputs. Streaming/incremental

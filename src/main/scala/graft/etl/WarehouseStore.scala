@@ -37,7 +37,7 @@ object ParquetWarehouse extends WarehouseStore {
   }
 
   def read(spark: SparkSession, warehouse: String, table: String): DataFrame =
-    spark.read.parquet(path(warehouse, table))
+    Load.readParquet(spark, path(warehouse, table))
 
   def upsert(spark: SparkSession, warehouse: String, table: String,
       df: DataFrame, key: String): Unit =

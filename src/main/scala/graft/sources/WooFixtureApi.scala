@@ -20,6 +20,10 @@ import org.apache.spark.sql.functions._
   * [[PagedSource]] for why, and `sources.v2.PagedOrdersProvider` for the
   * partitioned production shape); the JSON is assembled DISTRIBUTED via
   * `to_json(struct(…))` and only the final page buffers are collected.
+  * Every query is bounded by its request: an order window aggregates the
+  * line items of the window's orders only, and id batches semi-join
+  * their tables. [[parse]] hands a payload batch back as ONE partition —
+  * it already sits on the driver, so its consumers plan no shuffle.
   */
 object WooFixtureApi {
 
@@ -28,9 +32,21 @@ object WooFixtureApi {
     * for [[PagedSource.fetchAll]]. */
   def orderJsonsSince(spark: SparkSession, dir: String, sinceIso: String,
       untilIso: Option[String] = None): Seq[String] = {
-    val li = Tables.lineitem(spark, dir)
-    val items = li.groupBy(col("l_orderkey").as("o_orderkey"))
-      .agg(collect_list(struct(
+    val since = Tables.orders(spark, dir)
+      .filter(col("o_orderdate") >= to_timestamp(lit(sinceIso)))
+    val window =
+      untilIso.fold(since)(u => since.filter(col("o_orderdate") < to_timestamp(lit(u))))
+    // only the window's line items reach the aggregate: a 1-day window
+    // carries a handful of orders, the lineitem table all of history
+    // (an empty window's broadcast side lets AQE skip the lineitem scan).
+    // An order's items are listed by line number, then content: the
+    // collect_list order alone would be the aggregate's arrival order,
+    // which changes with the number of orders aggregated beside it.
+    val items = Tables.lineitem(spark, dir)
+      .join(broadcast(window.select(col("o_orderkey").as("l_orderkey"))),
+        Seq("l_orderkey"), "left_semi")
+      .groupBy(col("l_orderkey").as("o_orderkey"))
+      .agg(sort_array(collect_list(struct(col("l_linenumber"), struct(
         col("l_partkey").as("product_id"),
         lit(0L).as("variation_id"),
         concat(lit("sku-"), col("l_partkey")).as("sku"),
@@ -39,10 +55,9 @@ object WooFixtureApi {
         format_string("%.2f", col("l_extendedprice") / col("l_quantity")).as("price"),
         format_string("%.2f", col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("total"),
         format_string("%.2f", col("l_extendedprice")).as("subtotal"),
-        lit("").as("tax_class"))).as("line_items"))
-    val since = Tables.orders(spark, dir)
-      .filter(col("o_orderdate") >= to_timestamp(lit(sinceIso)))
-    untilIso.fold(since)(u => since.filter(col("o_orderdate") < to_timestamp(lit(u))))
+        lit("").as("tax_class")).as("item")))).as("lines"))
+      .select(col("o_orderkey"), transform(col("lines"), _.getField("item")).as("line_items"))
+    window
       .join(items, Seq("o_orderkey"), "left")
       .select(to_json(struct(
         col("o_orderkey").as("id"),
@@ -105,10 +120,13 @@ object WooFixtureApi {
   }
 
   /** Parse a JSON payload batch with one of the [[graft.model.WooSchemas]]
-    * shapes (explicit schema — never inferred). */
+    * shapes (explicit schema — never inferred), as ONE partition: the
+    * batch is a driver-side `Seq`, so a single partition lets its dedup
+    * window and aggregates plan with no exchange. Scale is the DSv2 paged
+    * connector's job (`sources.v2.PagedOrdersProvider`), not this one's. */
   def parse(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
       jsons: Seq[String]): DataFrame = {
     import spark.implicits._
-    spark.read.schema(schema).json(jsons.toDS())
+    spark.read.schema(schema).json(jsons.toDS()).coalesce(1)
   }
 }

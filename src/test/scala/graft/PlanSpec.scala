@@ -336,6 +336,67 @@ class PlanSpec extends AnyFunSuite {
     assert(!exchangeLines.contains("text"), s"document text crosses the wire:\n$exchangeLines")
   }
 
+  /** Run `f` and return what Spark's hint-error logger warned meanwhile
+    * (the logger is held at WARN for the call, whatever the root level). */
+  private def hintWarnings[A](f: => A): (A, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    import scala.jdk.CollectionConverters._
+    val name = "org.apache.spark.sql.catalyst.analysis.HintErrorLogger"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("hint-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val levelBefore = ctx.getConfiguration.getLoggerConfig(name).getLevel
+    Configurator.setLevel(name, Level.WARN)
+    ctx.getConfiguration.getLoggerConfig(name).addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    try { val a = f; (a, seen.asScala.toSeq) }
+    finally {
+      ctx.getConfiguration.getLoggerConfig(name).removeAppender(capture.getName)
+      Configurator.setLevel(name, levelBefore)
+      capture.stop()
+    }
+  }
+
+  test("nightly batch: the facts plan no shuffle, and both refund joins broadcast by their hint (ETL)") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    object Nodes extends AdaptiveSparkPlanHelper
+    // the capture sees a hint that reaches no join
+    val (_, control) = hintWarnings(broadcast(spark.range(1).toDF()).select("id").collect())
+    assert(control.exists(_.contains("not part of a join relation")), control)
+
+    // a driver-held batch, as processBatch parses it: three months of
+    // orders, some of them refunded
+    val raw = graft.sources.WooFixtureApi.parse(spark, graft.model.WooSchemas.rawOrder,
+      graft.sources.WooFixtureApi.orderJsonsSince(spark, sf, "2001-06-01 00:00:00",
+        Some("2001-09-01 00:00:00")))
+    val (results, warnings) = hintWarnings {
+      val facts = Run.batchFacts(spark, raw, sf).get
+      Seq(facts.orders, facts.items).map(df => (df.collect(), df.queryExecution.executedPlan))
+    }
+    assert(warnings.isEmpty, warnings.mkString("\n"))
+    val Seq((orderRows, ordersPlan), (_, itemsPlan)) = results
+    assert(orderRows.exists(_.getAs[Double]("refund_total") > 0),
+      "the window carries no refund: the refund joins went unexercised")
+    for (p <- Seq(ordersPlan, itemsPlan))
+      assert(Nodes.collect(p) { case e: ShuffleExchangeExec => e }.isEmpty, p.toString)
+    def refundJoins(p: org.apache.spark.sql.execution.SparkPlan, refundCol: String) =
+      Nodes.collect(p) { case j if j.children.size == 2 &&
+        j.children(1).output.exists(_.name == refundCol) => j }
+    for ((p, refundCol) <- Seq(ordersPlan -> "refund_total", itemsPlan -> "_roid")) {
+      val joins = refundJoins(p, refundCol)
+      assert(joins.nonEmpty && joins.forall(_.isInstanceOf[BroadcastHashJoinExec]), p.toString)
+    }
+  }
+
   test("n-gram NLL exchanges carry 60-bit hashes, never term strings (X41/X45)") {
     // the r14→r15 fix: the vocab group/join keys hashed to longs (the
     // x44 discipline) — a regression back to string `term` keys would

@@ -43,7 +43,7 @@ class PipelineE2ESpec extends AnyFunSuite {
                        refundsJson: Seq[String]): Unit = {
     val (o, items) = Normalize(orders)
     val enriched = Enrich.itemsWithCategories(items, rawProducts(products: _*))
-    val (oFinal, iFinal) = Enrich.applyRefunds(
+    val (oFinal, iFinal) = graft.Run.applyBatchRefunds(
       o, enriched, rawRefunds(refundsJson: _*))
     Load.upsertParquet(spark, s"$dir/fct_orders.parquet",
       Load.alignColumns(oFinal, WooSchemas.fctOrders), Seq("order_id"))

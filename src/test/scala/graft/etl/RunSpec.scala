@@ -1,6 +1,8 @@
 package graft.etl
 
 import graft.{Run, SparkTestSession}
+import graft.io.Tables
+import graft.sources.WooFixtureApi
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -123,6 +125,127 @@ class RunSpec extends AnyFunSuite {
       val active = spark.sparkContext.statusTracker.getActiveJobIds()
       assert(active.isEmpty, s"jobs ${active.mkString(",")} still running after $args")
     }
+  }
+
+  test("a nightly 1-day run stays within its Spark job budget") {
+    // history up to 2001-07-26 seeds the warehouse; the run is one day
+    // of 4 orders (13 products, 4 refunded line items) through the
+    // backfill branch, re-enrich pass included
+    val wh = java.nio.file.Files.createTempDirectory("graft-run-budget").toString
+    Run.processBatch(spark, data, wh, "1995-01-01 00:00:00", Some("2001-07-26 00:00:00"))
+    val sc = spark.sparkContext
+    val group = "graft-run-budget"
+    // AQE's stage jobs run under the submitting thread's job group too
+    sc.setJobGroup(group, "one nightly run")
+    val summary =
+      try Run.execute(spark, Run.Args(data = data, warehouse = wh,
+        backfillStart = Some("2001-07-26"), now = Some("2001-07-27T00:00:00Z")))
+      finally sc.clearJobGroup()
+    assert(summary.contains("orders=4"), summary)
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    val running = jobs.filter(id => sc.statusTracker.getJobInfo(id)
+      .exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+    assert(running.isEmpty, s"jobs ${running.mkString(",")} still running")
+    // the count measured when the budget was set: a change that adds
+    // jobs to the nightly path has to raise it on purpose
+    val Budget = 29
+    assert(jobs.length <= Budget, s"${jobs.length} Spark jobs for one nightly run")
+  }
+
+  test("graft.batch.maxIds: an over-cap batch fails loudly, for order ids and for product ids") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-run-cap").toString
+    val before = sys.props.get("graft.batch.maxIds")
+    sys.props("graft.batch.maxIds") = "2"
+    try {
+      // 1996-04-28 to -30: three orders, two distinct products (two of
+      // the orders carry no line items)
+      val tooManyOrders = intercept[IllegalStateException] {
+        Run.processBatch(spark, data, wh, "1996-04-28 00:00:00", Some("1996-05-01 00:00:00"))
+      }
+      assert(tooManyOrders.getMessage.contains("batch carries > 2 distinct order ids"),
+        tooManyOrders.getMessage)
+      // 2001-06-07: one order, four distinct products
+      val tooManyProducts = intercept[IllegalStateException] {
+        Run.processBatch(spark, data, wh, "2001-06-07 00:00:00", Some("2001-06-08 00:00:00"))
+      }
+      assert(tooManyProducts.getMessage.contains("batch carries > 2 distinct product ids"),
+        tooManyProducts.getMessage)
+      // both failed before the load: no table was created
+      assert(!graft.etl.ParquetWarehouse.exists(spark, wh, "fct_orders"))
+      assert(!graft.etl.ParquetWarehouse.exists(spark, wh, "fct_order_items"))
+    } finally before match {
+      case Some(v) => sys.props("graft.batch.maxIds") = v
+      case None => sys.props.remove("graft.batch.maxIds")
+    }
+  }
+
+  /** `orderJsonsSince` without the pushdown: every order's line items
+    * are aggregated, then the window joins them. */
+  private def wholeTable(sinceIso: String, untilIso: Option[String]): Seq[String] = {
+    val items = Tables.lineitem(spark, data).groupBy(col("l_orderkey").as("o_orderkey"))
+      .agg(sort_array(collect_list(struct(col("l_linenumber"), struct(
+        col("l_partkey").as("product_id"),
+        lit(0L).as("variation_id"),
+        concat(lit("sku-"), col("l_partkey")).as("sku"),
+        concat(lit("part-"), col("l_partkey")).as("name"),
+        col("l_quantity").cast("int").as("quantity"),
+        format_string("%.2f", col("l_extendedprice") / col("l_quantity")).as("price"),
+        format_string("%.2f", col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("total"),
+        format_string("%.2f", col("l_extendedprice")).as("subtotal"),
+        lit("").as("tax_class")).as("item")))).as("lines"))
+      .select(col("o_orderkey"), transform(col("lines"), _.getField("item")).as("line_items"))
+    val since = Tables.orders(spark, data)
+      .filter(col("o_orderdate") >= to_timestamp(lit(sinceIso)))
+    untilIso.fold(since)(u => since.filter(col("o_orderdate") < to_timestamp(lit(u))))
+      .join(items, Seq("o_orderkey"), "left")
+      .select(to_json(struct(
+        col("o_orderkey").as("id"),
+        date_format(col("o_orderdate"), "yyyy-MM-dd'T'HH:mm:ss").as("date_created_gmt"),
+        lit(null).cast("string").as("date_created"),
+        col("o_orderstatus").as("status"),
+        lit("USD").as("currency"),
+        col("o_custkey").as("customer_id"),
+        lit("0").as("discount_total"), lit("0").as("discount_tax"),
+        lit("0").as("shipping_total"), lit("0").as("shipping_tax"),
+        lit("0").as("cart_tax"),
+        format_string("%.2f", col("o_totalprice") * 0.1).as("total_tax"),
+        format_string("%.2f", col("o_totalprice")).as("total"),
+        struct(lit("DE").as("country"), lit("Berlin").as("city")).as("billing"),
+        coalesce(col("line_items"), array()).as("line_items"))).as("j"),
+        col("o_orderdate"), col("o_orderkey"))
+      .orderBy("o_orderdate", "o_orderkey")
+      .collect().map(_.getString(0)).toIndexedSeq
+  }
+
+  // The fixture API's order window is pushed into its line-item side (a
+  // broadcast semi-join before the collect_list); the payloads must be
+  // exactly those of the whole-table form, which aggregates every line
+  // item and then joins the window to it.
+  test("fixture API: the window pushdown returns the whole-table payloads, in the same order") {
+    val windows = Seq(
+      "1-day" -> ("2001-07-26 00:00:00", Some("2001-07-27 00:00:00")),
+      "30-day" -> ("2001-04-10 00:00:00", Some("2001-05-10 00:00:00")),
+      "empty" -> ("2001-08-01 00:01:00", Some("2001-09-01 00:00:00")),
+      "since-only" -> ("2000-06-01 00:00:00", None))
+    for ((name, (since, until)) <- windows) {
+      val pushed = WooFixtureApi.orderJsonsSince(spark, data, since, until)
+      assert(pushed == wholeTable(since, until), s"$name window diverged")
+      if (name == "empty") assert(pushed == Seq.empty)
+      else assert(pushed.nonEmpty, s"$name window is empty: it pins nothing")
+    }
+  }
+
+  test("fixture API: an order without line items still renders \"line_items\":[]") {
+    val (since, until) = ("2001-04-10 00:00:00", "2001-05-10 00:00:00")
+    val bare = Tables.orders(spark, data)
+      .filter(col("o_orderdate") >= to_timestamp(lit(since)) &&
+        col("o_orderdate") < to_timestamp(lit(until)))
+      .join(Tables.lineitem(spark, data).select(col("l_orderkey").as("o_orderkey")),
+        Seq("o_orderkey"), "left_anti")
+      .count()
+    assert(bare > 0, "the window holds no order without line items")
+    val jsons = WooFixtureApi.orderJsonsSince(spark, data, since, Some(until))
+    assert(jsons.count(_.contains("\"line_items\":[]")) == bare)
   }
 
   test("execute invokes onFailure with the error and rethrows (notify.py twin)") {
