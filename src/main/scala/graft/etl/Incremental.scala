@@ -41,14 +41,6 @@ object Incremental {
     }
   }
 
-  /** One incremental run: read cursor, process everything since, advance
-    * (reference `run.py:128-162`). */
-  def runOnce(state: StateStore, now: Instant = Instant.now())(
-      process: String => Option[Instant]): Unit = {
-    val since = state.sinceIso(now)
-    process(since).foreach(state.advanceFrom)
-  }
-
   /** Outcome of one orchestrated incremental run: orders loaded, and the
     * re-enrich pass if one ran — (forceAll, rows touched). */
   final case class FlowRun(nOrders: Long, reEnriched: Option[(Boolean, Long)])

@@ -11,18 +11,28 @@ package graft.io
   * (build-on-first-use, reuse for the session), the same contract as
   * [[Tables]]' schema cache and Spark's own broadcast reuse.
   *
-  * Scope and correctness: entries are keyed by dataset path + build
-  * parameters, and hold small DRIVER-side values (a 512-byte filter, ≤64
-  * centroids, a vocabulary) — never corpus-sized state. That bound is
-  * ENFORCED, not assumed: [[getOrBuild]] size-estimates every built
-  * value and refuses to cache one above [[maxBytes]] (the value is still
-  * returned — correctness is never gated on cacheability — but each
-  * construction then pays its own build, which surfaces the misuse in
-  * the bench instead of hiding corpus-sized state on the driver). Query
-  * sites whose artifact GROWS with the corpus (LSH candidate pairs,
-  * cluster maps, vocabularies) must not collect-then-hope: they dispatch
-  * through [[Regime.collectIfSmall]] and fall back to the distributed
-  * frame above the row bound — pinned by RegimeSpec.
+  * Entries are keyed by dataset path + build parameters and come in
+  * three kinds, all through [[getOrBuild]]:
+  *   - small DRIVER-side values (a 512-byte filter, ≤64 centroids, an
+  *     import path). That bound is ENFORCED, not assumed: every built
+  *     value is size-estimated and one above [[maxBytes]] is served but
+  *     never stored, so each construction pays its own build and the
+  *     misuse shows in the bench instead of hiding corpus-sized state on
+  *     the driver;
+  *   - regime-dispatched artifacts that grow with the corpus (LSH
+  *     candidate pairs, cluster maps, vocabularies), built and served by
+  *     [[Regime.serve]]: collected rows under the row bound, a persisted
+  *     frame handle above it;
+  *   - distributed projections materialized once as a localCheckpoint
+  *     ([[getOrBuildFrame]]).
+  *
+  * Frames are SparkContext-scoped while this cache is JVM-global: a hit
+  * whose value holds a frame of a stopped context (a test or pipeline
+  * that stopped its session and started another) would fail every
+  * consumer, so [[getOrBuild]] drops such an entry and rebuilds it.
+  * Spark runs at most one SparkContext per JVM, so "not stopped" means
+  * "the context every live session shares" — a frame built through a
+  * sibling session (`spark.newSession()`) serves every session.
   *
   * Like the schema cache, immutability of the keyed dataset is assumed
   * for the JVM's lifetime (true for fixture dirs and for production
@@ -83,7 +93,8 @@ object ArtifactCache {
     48L + n.toLong * (sample.sum / sample.length)
   }
 
-  /** The artifact for `key`, building it on first use.
+  /** The artifact for `key`, building it on first use — or again, when
+    * the cached value holds a frame of a stopped SparkContext ([[live]]).
     *
     * NOT computeIfAbsent: a build closure may itself read through this
     * cache (x29's bloom build scans Tables, whose import path caches the
@@ -95,7 +106,10 @@ object ArtifactCache {
     * the loser's copy is discarded and the first stored value wins). */
   def getOrBuild[T <: AnyRef](key: String)(build: => T): T = {
     val hit = cache.get(key)
-    if (hit != null) return hit.asInstanceOf[T]
+    if (hit != null) {
+      if (live(hit)) return hit.asInstanceOf[T]
+      if (cache.remove(key, hit)) release(hit)
+    }
     val built = build
     val est = roughBytes(built)
     if (est > maxBytes) {
@@ -111,8 +125,26 @@ object ArtifactCache {
     (if (raced != null) raced else built).asInstanceOf[T]
   }
 
+  /** The frame handles a cached value holds: the value itself, or any
+    * inside an Either, an Option or a small Product (a (scalar, artifact)
+    * pair). Collections are never walked, so a hit stays O(1). */
+  private def frames(v: Any): Iterator[org.apache.spark.sql.Dataset[_]] = v match {
+    case ds: org.apache.spark.sql.Dataset[_] => Iterator.single(ds)
+    case e: Either[_, _] => e.fold(frames, frames)
+    case o: Option[_] => o.iterator.flatMap(frames)
+    case _: scala.collection.Iterable[_] => Iterator.empty
+    case p: Product if p.productArity <= 4 => p.productIterator.flatMap(frames)
+    case _ => Iterator.empty
+  }
+
+  /** True unless `v` holds a frame of a stopped SparkContext. Only one
+    * SparkContext runs per JVM, so a frame of a live context can serve
+    * every live session. */
+  private[graft] def live(v: Any): Boolean =
+    frames(v).forall(!_.sparkSession.sparkContext.isStopped)
+
   /** Best-effort block release for evicted artifacts that hold (or wrap,
-    * one level deep) a persisted frame handle — dropping the handle
+    * see [[frames]]) a persisted frame handle — dropping the handle
     * alone would strand its storage blocks until the ContextCleaner
     * gets to them, and Bench measures in the window where that cleanup
     * lands. unpersist is a no-op on frames that were never persisted.
@@ -122,25 +154,18 @@ object ArtifactCache {
     * is unpersisted directly, which frees the blocks now instead of at
     * ContextCleaner-after-GC time. Safe here because release only runs
     * on EVICTION, where the handle is dropped and never served again. */
-  private def release(v: AnyRef): Unit = {
-    def un(x: Any): Unit = x match {
-      case ds: org.apache.spark.sql.Dataset[_] =>
-        try {
-          ds.unpersist()
-          // ROOT-only checkpoint release: an entry DERIVED from another
-          // entry's checkpoint (dfreq is built over the docTermTf
-          // handle) must not strand its still-served upstream blocks on
-          // a selective invalidate — only a handle whose plan root IS
-          // the checkpoint frees storage here
-          graft.util.Checkpoints.releaseRoot(ds)
-        } catch { case scala.util.control.NonFatal(_) => () }
-      case e: Either[_, _] => e.fold(un, un)
-      case o: Option[_] => o.foreach(un)
-      case p: Product if p.productArity <= 4 => p.productIterator.foreach(un)
-      case _ => ()
+  private def release(v: AnyRef): Unit =
+    frames(v).foreach { ds =>
+      try {
+        ds.unpersist()
+        // ROOT-only checkpoint release: an entry DERIVED from another
+        // entry's checkpoint (dfreq is built over the docTermTf
+        // handle) must not strand its still-served upstream blocks on
+        // a selective eviction — only a handle whose plan root IS
+        // the checkpoint frees storage here
+        graft.util.Checkpoints.releaseRoot(ds)
+      } catch { case scala.util.control.NonFatal(_) => () }
     }
-    un(v)
-  }
 
   /** Build-once serve-many DISTRIBUTED projection artifact: a shared
     * intermediate frame (a tokenized+hashed corpus projection, an
@@ -152,17 +177,10 @@ object ArtifactCache {
     * cap is irrelevant by construction. Production shape: a curation
     * pipeline materializes its tokenized corpus once per snapshot and
     * every downstream pass reads the materialization; rebuilding the
-    * projection per query re-pays the corpus scan each time. A handle
-    * whose SparkContext died (cross-session test reuse) is invalidated
-    * and rebuilt, same contract as [[Regime.servable]] frames. */
-  def getOrBuildFrame(key: String, spark: org.apache.spark.sql.SparkSession)(
-      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    def fresh(): org.apache.spark.sql.DataFrame =
-      getOrBuild(key)(build.localCheckpoint(false))
-    val f = fresh()
-    if (Regime.servable(f, spark)) f
-    else { invalidate(key); fresh() }
-  }
+    * projection per query re-pays the corpus scan each time. */
+  def getOrBuildFrame(key: String)(
+      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    getOrBuild(key)(build.localCheckpoint(false))
 
   /** Drop every cached artifact (tests, or pipelines that rewrite a
     * dataset path in-place mid-session), releasing persisted blocks. */
@@ -183,13 +201,6 @@ object ArtifactCache {
       val e = it.next()
       if (!keep(e.getKey)) { release(e.getValue); it.remove() }
     }
-  }
-
-  /** Drop one entry (releasing blocks) — used when a cached frame handle
-    * belongs to a stopped/foreign SparkContext and must be rebuilt. */
-  private[graft] def invalidate(key: String): Unit = {
-    val v = cache.remove(key)
-    if (v != null) release(v)
   }
 
   private[graft] def size: Int = cache.size()

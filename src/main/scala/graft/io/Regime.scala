@@ -1,20 +1,29 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
 
-/** Measured-size regime dispatch for dual-regime query sites.
+/** Measured-size regime dispatch for artifacts that grow with the corpus.
   *
   * Several operators have two legitimate physical shapes: a driver-side
   * artifact when the derived state is provably small (an LSH candidate
   * list on a deduplicated snapshot, a bounded vocabulary) and a fully
   * distributed frame when it is not (a 100 TB web corpus's candidate set
   * or term vocabulary is billions of rows — "pair participants only"
-  * does not make it driver-small). The choice must be made by MEASURED
-  * size, not assumption: [[collectIfSmall]] probes the frame with a
-  * `limit(bound + 1)` collect — one job either way, and in the
-  * under-bound case the probe IS the complete result set (a limit above
-  * the true row count returns every row) — and returns `None` above the
-  * bound, telling the site to serve the distributed plan instead.
+  * does not make it driver-small). The choice is made by MEASURED size:
+  * [[collectIfSmall]] probes the frame with a `limit(bound + 1)` collect
+  * — one job either way, and under the bound the probe IS the complete
+  * result set — and returns `None` above the bound.
+  *
+  * Join-only artifacts (candidate pairs, cluster labels, gram and
+  * vocabulary tables) go through ONE build-and-serve path, [[serve]] /
+  * [[serveWith]]: the built frame is persisted first so the probe fills
+  * its blocks, and the artifact cached under its key in [[ArtifactCache]]
+  * is either the collected rows (the blocks are released; every
+  * construction re-encodes the rows as a LocalRelation) or the persisted
+  * handle (the build runs once and every consumer reads the blocks).
+  * Only driver code that consumes the rows itself calls
+  * [[collectIfSmall]] directly (Corpus' `InSet` rebuilds, Dedup's
+  * arrival fold).
   *
   * The bound is rows, not bytes, because the gated artifacts are
   * fixed-width rows (id pairs, (term, count)); `graft.regime
@@ -41,18 +50,6 @@ object Regime {
   private[graft] val lastDecision =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** True when a cached frame handle can serve session `s`: its blocks
-    * and RDDs belong to s's live SparkContext. The ArtifactCache is
-    * JVM-global while frames are context-scoped — a handle cached by a
-    * stopped (or different) context would fail every consumer with
-    * "SparkContext has been shut down"; sites must invalidate and
-    * rebuild instead (frames from sibling sessions of the SAME context
-    * are fine: checkpoint/persist blocks are context-owned). */
-  def servable(frame: org.apache.spark.sql.Dataset[_],
-      s: org.apache.spark.sql.SparkSession): Boolean =
-    (frame.sparkSession.sparkContext eq s.sparkContext) &&
-      !s.sparkContext.isStopped
-
   /** The complete rows of `df` iff it holds at most [[collectMaxRows]]
     * of them, else `None`. The over-bound probe still computes the
     * frame (aggregation forces it) but transfers only bound+1 rows —
@@ -69,4 +66,71 @@ object Regime {
     lastDecision.put(key, if (fits) "collected" else "distributed")
     if (fits) Some(probe.toIndexedSeq) else None
   }
+
+  /** One cold build as [[serveWith]]'s side value sees it: `frame` is
+    * the built (persisted) frame, `rows` runs the probe on first use —
+    * the decoded rows under the bound, `None` above it. A side value may
+    * read either, and may overlap its own action with the probe. */
+  final class Probe[T] private[Regime] (
+      val frame: DataFrame, probe: => Option[IndexedSeq[T]]) {
+    lazy val rows: Option[IndexedSeq[T]] = probe
+  }
+
+  /** The join-only artifact under `key`, built on first use and served
+    * as a frame in either regime: under the bound a LocalRelation of the
+    * collected rows named `columns` (broadcast-hinted when `hint`), above
+    * it the persisted frame. `build` runs only on a cache miss; `decode`
+    * turns a probed row into the cached value.
+    *
+    * `persist = false` is for a `build` whose frame is already
+    * materialized (a checkpoint or a driver relation), where a persist
+    * would cost a job and a copy; `overBound` replaces an over-bound
+    * frame before it is cached (x19's labels must not stay a driver
+    * relation). */
+  def serve[T: Encoder](s: SparkSession, key: String, columns: String*)(
+      decode: Row => T, hint: Boolean = false, persist: Boolean = true,
+      overBound: DataFrame => DataFrame = identity)(
+      build: => DataFrame): DataFrame =
+    encoded(s, columns, hint, ArtifactCache.getOrBuild(key)(
+      measured[T, Unit](key, decode, persist, overBound, build)(_ => ())._2))
+
+  /** [[serve]] for an artifact that carries one side value (a grand
+    * total, a document count), computed once per build by `side` and
+    * cached with the artifact. */
+  def serveWith[T: Encoder, A](s: SparkSession, key: String, columns: String*)(
+      decode: Row => T, hint: Boolean = false)(
+      build: => DataFrame)(side: Probe[T] => A): (A, DataFrame) = {
+    val (a, held) = ArtifactCache.getOrBuild(key)(
+      measured(key, decode, persist = true, identity, build)(side))
+    (a, encoded(s, columns, hint, held))
+  }
+
+  /** Persist first, the probe fills the blocks, unpersist on collect:
+    * the build runs exactly once whichever regime wins (probing the raw
+    * pipeline and then materializing it would run it twice above the
+    * bound). persist, not localCheckpoint: the collected regime releases
+    * the blocks with a public unpersist, and an over-bound frame that
+    * loses its blocks recomputes from lineage. */
+  private def measured[T, A](key: String, decode: Row => T,
+      persist: Boolean, overBound: DataFrame => DataFrame, build: => DataFrame)(
+      side: Probe[T] => A): (A, Either[IndexedSeq[T], DataFrame]) = {
+    val frame = if (persist) build.persist() else build
+    val probe = new Probe[T](frame, collectIfSmall(key, frame).map(_.map(decode)))
+    val a = side(probe)
+    probe.rows match {
+      case Some(rows) =>
+        if (persist) frame.unpersist()
+        (a, Left(rows))
+      case None => (a, Right(overBound(frame)))
+    }
+  }
+
+  private def encoded[T: Encoder](s: SparkSession, columns: Seq[String],
+      hint: Boolean, held: Either[IndexedSeq[T], DataFrame]): DataFrame =
+    held match {
+      case Left(rows) =>
+        val local = s.createDataset(rows).toDF(columns: _*)
+        if (hint) org.apache.spark.sql.functions.broadcast(local) else local
+      case Right(frame) => frame
+    }
 }

@@ -22,27 +22,15 @@ import org.apache.spark.sql.functions._
   */
 object CorpusQueries {
 
-  /** The x22/x42 shared benchmark 3-gram index: regime-dispatched by
-    * measured size ([[Corpus.benchmarkGramIndex]]) and cached per suite
-    * snapshot — eval suites are fixed artifacts checked against every
-    * ingest batch, so the report (x22) and the gate (x42) serve the same
-    * build. A cached distributed-regime frame from a dead SparkContext
-    * is invalidated and rebuilt (the [[graft.io.Regime.servable]]
-    * contract, same as x40's frequent-line artifact). */
+  /** The x22/x42 shared benchmark 3-gram index ([[Corpus.benchmarkGramIndex]]),
+    * built once per suite snapshot: eval suites are fixed artifacts
+    * checked against every ingest batch, so the report (x22) and the
+    * gate (x42) serve the same build. */
   private def benchGramIndex(
       s: org.apache.spark.sql.SparkSession, d: String,
-      isBench: org.apache.spark.sql.Column)
-      : Either[IndexedSeq[Long], org.apache.spark.sql.DataFrame] = {
-    val key = s"bench-grams:3:$d"
-    def build = Corpus.benchmarkGramIndex(
-      Tables.documents(s, d), "doc_id", "text", isBench, n = 3, key)
-    graft.io.ArtifactCache.getOrBuild(key)(build) match {
-      case Right(f) if !graft.io.Regime.servable(f, s) =>
-        graft.io.ArtifactCache.invalidate(key)
-        graft.io.ArtifactCache.getOrBuild(key)(build)
-      case ok => ok
-    }
-  }
+      isBench: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame =
+    Corpus.benchmarkGramIndex(
+      Tables.documents(s, d), "doc_id", "text", isBench, n = 3, s"bench-grams:3:$d")
 
   /** DuckDB n-gram builder over a token-list column `t` (mirrors
     * [[Dedup.shinglesFromTokens]], including the <n-token guard). */

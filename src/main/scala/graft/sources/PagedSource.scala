@@ -1,9 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
-import scala.jdk.CollectionConverters._
-
 /** S1/S2 — paginated REST-style ingestion (reference
   * `src/etl/extract/wc_client.py:36-49`): loop `page=1..n` with a fixed
   * page size, accumulate, stop on the first short or empty page; HTTP
@@ -16,9 +12,8 @@ import scala.jdk.CollectionConverters._
   * a DataSource V2 `TableProvider` whose `planInputPartitions` carves
   * `[1..maxPage]` into per-task ranges and pushes `after`/`status`
   * filters into query params (`SupportsPushDownFilters`). This module
-  * implements the reference's exact client semantics plus the
-  * createDataFrame hand-off that both shapes share; the fixture harness
-  * stands a parquet-backed client in for the network.
+  * implements the reference's exact client semantics; the fixture
+  * harness stands a parquet-backed client in for the network.
   */
 object PagedSource {
 
@@ -52,9 +47,4 @@ object PagedSource {
     }
     out.toSeq
   }
-
-  /** Hand the accumulated batch to Spark with an explicit schema (never
-    * inferred — the reference's fixed DDL, SURVEY.md §1.2). */
-  def toDF(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(rows.asJava, schema)
 }

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.RegimeBound.withBound
 import graft.SparkTestSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -128,12 +129,6 @@ class CorpusSpec extends AnyFunSuite {
         r.getAs[Double]("dup_frac")).toMap
     assert(out(1L) == 1.0 && out(2L) == 1.0)
     assert(out(3L) == 0.0)
-  }
-
-  private def withBound[T](n: Int)(body: => T): T = {
-    sys.props("graft.regime.collectMaxRows") = n.toString
-    try body
-    finally sys.props.remove("graft.regime.collectMaxRows")
   }
 
   test("boilerplateLines drops corpus-frequent lines and rebuilds in order") {

@@ -194,18 +194,13 @@ class DedupSpec extends AnyFunSuite {
     assert(collected == foldIds,
       s"replay diverged from fold: only-replay=${(collected -- foldIds).take(5)}, " +
         s"only-fold=${(foldIds -- collected).take(5)}")
-    val prev = sys.props.get("graft.regime.collectMaxRows")
-    sys.props("graft.regime.collectMaxRows") = "0"
-    try {
+    graft.RegimeBound.withBound(0) {
       val distributed = replayIds()
       assert(graft.io.Regime.lastDecision.get("arrival-cand") == "distributed")
       assert(distributed == foldIds,
         s"distributed-regime replay diverged from fold: " +
           s"only-replay=${(distributed -- foldIds).take(5)}, " +
           s"only-fold=${(foldIds -- distributed).take(5)}")
-    } finally prev match {
-      case Some(v) => sys.props("graft.regime.collectMaxRows") = v
-      case None => sys.props.remove("graft.regime.collectMaxRows")
     }
     // sanity: the backfill actually dropped the planted duplicates
     assert(collected.size < gen.count())
@@ -249,17 +244,12 @@ class DedupSpec extends AnyFunSuite {
       s"closed form diverged from step fold: " +
         s"only-replay=${(collected -- foldIds).take(5)}, " +
         s"only-fold=${(foldIds.toSet -- collected).take(5)}")
-    val prev = sys.props.get("graft.regime.collectMaxRows")
-    sys.props("graft.regime.collectMaxRows") = "0"
-    try {
+    graft.RegimeBound.withBound(0) {
       val distributed = replayIds()
       assert(graft.io.Regime.lastDecision.get("arrival-containment-cand")
         == "distributed")
       assert(distributed == foldIds.toSet,
         "distributed-regime containment replay diverged from the fold")
-    } finally prev match {
-      case Some(v) => sys.props("graft.regime.collectMaxRows") = v
-      case None => sys.props.remove("graft.regime.collectMaxRows")
     }
     // the inclusion machinery actually fired: snippets dropped
     assert(collected.size < gen.count())

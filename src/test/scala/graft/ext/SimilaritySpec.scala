@@ -136,15 +136,14 @@ class SimilaritySpec extends AnyFunSuite {
     val driverP = Similarity.trainPqCodebooks(emb, "vec_id", "embedding", m = 8, ksub = 8, rounds = 2)
     assert(graft.io.Regime.lastDecision.get("ivf-train") == "collected")
     assert(graft.io.Regime.lastDecision.get("pq-train") == "collected")
-    sys.props("graft.regime.collectMaxRows") = "4"
-    try {
+    graft.RegimeBound.withBound(4) {
       val distK = Similarity.trainIvfKmeans(emb, "vec_id", "embedding", nLists = 8, rounds = 2)
       val distP = Similarity.trainPqCodebooks(emb, "vec_id", "embedding", m = 8, ksub = 8, rounds = 2)
       assert(graft.io.Regime.lastDecision.get("ivf-train") == "distributed")
       assert(graft.io.Regime.lastDecision.get("pq-train") == "distributed")
       assert(distK == driverK, "k-means centroids differ across training regimes")
       assert(distP == driverP, "PQ codebooks differ across training regimes")
-    } finally sys.props.remove("graft.regime.collectMaxRows")
+    }
   }
 
   test("IVFPQ: deterministic codes, exact duplicates rank first, usable recall at 64x compression") {

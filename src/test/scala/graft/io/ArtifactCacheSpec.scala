@@ -49,10 +49,10 @@ class ArtifactCacheSpec extends AnyFunSuite {
     def cachedIds: Set[Int] =
       sc.getRDDStorageInfo.filter(_.numCachedPartitions > 0).map(_.id).toSet
     val pre = cachedIds
-    val a = ArtifactCache.getOrBuildFrame(key, spark)(build)
+    val a = ArtifactCache.getOrBuildFrame(key)(build)
     val rowsA = a.collect().map(_.toString).sorted
     // second call serves the SAME checkpoint — no rebuild
-    val b = ArtifactCache.getOrBuildFrame(key, spark)(build)
+    val b = ArtifactCache.getOrBuildFrame(key)(build)
     assert(builds == 1, "frame artifact rebuilt on a warm serve")
     assert(b.collect().map(_.toString).sorted.sameElements(rowsA),
       "warm serve drifted from the built checkpoint")
@@ -63,7 +63,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
     // cached-RDD ids, not names (checkpoint RDD names are not stable).
     val mine = cachedIds -- pre
     assert(mine.nonEmpty, "the checkpoint build left no storage blocks")
-    ArtifactCache.invalidate(key)
+    ArtifactCache.retainOnly(_ != key)
     // release uses unpersist(blocking = false): poll briefly
     val deadline = System.nanoTime() + 5000000000L
     while (cachedIds.intersect(mine).nonEmpty && System.nanoTime() < deadline)
@@ -71,9 +71,35 @@ class ArtifactCacheSpec extends AnyFunSuite {
     assert(cachedIds.intersect(mine).isEmpty,
       "eviction left localCheckpoint blocks stranded in the block manager")
     // post-eviction call rebuilds from scratch with the same values
-    val c = ArtifactCache.getOrBuildFrame(key, spark)(build)
+    val c = ArtifactCache.getOrBuildFrame(key)(build)
     assert(builds == 2, "post-eviction serve did not rebuild")
     assert(c.collect().map(_.toString).sorted.sameElements(rowsA))
+    ArtifactCache.clear()
+  }
+
+  test("an artifact built through spark.newSession() is served to spark, not rebuilt") {
+    // one SparkContext per JVM: a sibling session's frames live in the
+    // same context, so the liveness check on a hit must accept them
+    ArtifactCache.clear()
+    val sibling = spark.newSession()
+    var builds = 0
+    def ids(ss: org.apache.spark.sql.SparkSession) = {
+      builds += 1; ss.range(0, 100).toDF("id")
+    }
+    val a = ArtifactCache.getOrBuildFrame("spec:sibling-frame")(ids(sibling))
+    val b = ArtifactCache.getOrBuildFrame("spec:sibling-frame")(ids(spark))
+    assert(builds == 1 && (b eq a), "a sibling session's checkpoint was rebuilt")
+    assert(b.count() == 100)
+    // the same through the regime path's persisted (over-bound) handle
+    import spark.implicits._
+    def served(ss: org.apache.spark.sql.SparkSession) =
+      Regime.serve[Long](ss, "spec:sibling-regime", "id")(decode = _.getLong(0))(ids(ss))
+    graft.RegimeBound.withBound(0) {
+      val c = served(sibling)
+      val d = served(spark)
+      assert(builds == 2 && (d eq c), "a sibling session's regime artifact was rebuilt")
+      assert(d.count() == 100)
+    }
     ArtifactCache.clear()
   }
 

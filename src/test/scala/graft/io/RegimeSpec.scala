@@ -1,6 +1,7 @@
 package graft.io
 
 import graft.{SparkEntry, SparkTestSession}
+import graft.RegimeBound.withBound
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver-small contract is CODE, not documentation (r6 verdict
@@ -18,12 +19,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class RegimeSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
-
-  private def withBound[T](n: Int)(body: => T): T = {
-    sys.props("graft.regime.collectMaxRows") = n.toString
-    try body
-    finally sys.props.remove("graft.regime.collectMaxRows")
-  }
 
   private def rows(name: String): Seq[String] =
     SparkEntry.queries(name)(spark, sf).collect().map(_.toString).toSeq
@@ -151,6 +146,58 @@ class RegimeSpec extends AnyFunSuite {
         "unigram-as-table x41 drifted from the broadcast regime")
     }
     ArtifactCache.clear()
+  }
+
+  // the remaining sites served through Regime.serve/serveWith, each at
+  // query level: collected at fixture scale, distributed under a forced
+  // bound, value-identical either way (query -> the artifact keys it
+  // dispatches)
+  private val forcedSites = Seq(
+    "x49_containment" -> Seq(s"lsh-cand:containment:12x2:$sf"),
+    "x50_inclusion" -> Seq(s"anchor-cand:inclusion:k4df64:$sf"),
+    "x43_dsir_select" -> Seq(
+      s"unigram-tf-target-en:documents:$sf", s"unigram-tf:documents:$sf"),
+    "x36_quality_survivors" -> Seq(s"cc:corpus3:minhash12x3:$sf"),
+    "x22_contamination" -> Seq(s"bench-grams:3:$sf"),
+    "x42_decontaminate" -> Seq(s"bench-grams:3:$sf"))
+
+  for ((query, keys) <- forcedSites)
+    test(s"$query: forced bound serves the distributed regime, value-identical") {
+      ArtifactCache.clear()
+      keys.foreach(Regime.lastDecision.remove)
+      val base = rows(query)
+      for (k <- keys) assert(decision(k) == "collected", s"$k should collect at fixture scale")
+      ArtifactCache.clear()
+      withBound(0) {
+        val forced = rows(query)
+        for (k <- keys) assert(decision(k) == "distributed", s"$k ignored the forced bound")
+        assert(forced == base, s"distributed $query drifted from the collected regime")
+      }
+      ArtifactCache.clear()
+    }
+
+  test("x43 cold under group a, then under group b: every job of each run carries its group") {
+    // x43 overlaps its two unigram builds on a second thread; that
+    // thread's jobs must carry the caller's job group, also when an
+    // earlier call ran under another group
+    val jobs = new graft.JobGroups(spark.sparkContext)
+    try {
+      for (group <- Seq("a", "b")) {
+        ArtifactCache.clear()
+        val begin = jobs.marker(s"begin-$group")
+        spark.sparkContext.setJobGroup(group, s"cold x43 under $group")
+        rows("x43_dsir_select")
+        val end = jobs.marker(s"end-$group")
+        val during = jobs.started.filter { case (id, _) => id > begin && id < end }
+        assert(during.nonEmpty)
+        val stray = during.filter(_._2 != group)
+        assert(stray.isEmpty, s"jobs of the run under $group carried other groups: $stray")
+      }
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      jobs.remove()
+      ArtifactCache.clear()
+    }
   }
 
   test("ArtifactCache refuses to store an over-cap artifact but still serves it") {
